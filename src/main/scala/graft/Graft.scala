@@ -72,18 +72,18 @@ object Graft {
     val counts = staged.map { case (name, df) =>
       val path = s"$outDir/$name.parquet"
       sources.Sinks.overwriteParquet(df, path)
-      val rows = spark.read.parquet(path).count()
+      val rows = Tables.parquet(spark, path).count()
       (name, path, rows)
     }
     sources.Sinks.syncWarehouse(spark,
       staged.map { case (n, _) =>
-        n -> spark.read.parquet(s"$outDir/$n.parquet")
+        n -> Tables.parquet(spark, s"$outDir/$n.parquet")
       }.toMap)
     // re-sort after the parquet roundtrip: the scan orders splits by
     // size, not by the writer's sort, and a human-facing report must
     // come out in (section, month) order
-    val report = spark.read
-      .parquet(s"$outDir/analytics_accounting_report.parquet")
+    val report = Tables
+      .parquet(spark, s"$outDir/analytics_accounting_report.parquet")
       .orderBy("section", "month")
     writeXlsx(report, s"$outDir/accounting_report.xlsx")
     writeSheetPayload(report, s"$outDir/accounting_report_sheet.json",
@@ -128,7 +128,7 @@ object Graft {
     val counts = staged.map { case (name, df) =>
       val path = s"$outDir/$name.parquet"
       sources.Sinks.overwriteParquet(df, path)
-      (name, path, spark.read.parquet(path).count())
+      (name, path, Tables.parquet(spark, path).count())
     }
     import spark.implicits._
     counts.toDF("table_name", "path", "n_rows").orderBy("table_name")

@@ -1,7 +1,16 @@
 package graft
 
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Parquet-backed catalog over a testdata scale-factor directory.
   *
@@ -9,10 +18,66 @@ import org.apache.spark.sql.functions._
   * `/root/reference/utils/fetch_parquet_utils.py:11-19`) but lazily: a scan
   * here is a Catalyst relation, so filters/projections declared downstream
   * are pushed into the parquet reader instead of materializing the file.
+  *
+  * A load launches no Spark job: [[parquet]] reads the schema from the
+  * file's footer on the driver instead of running Spark's one-task
+  * schema-inference job. Nothing is cached — every load re-reads the live
+  * footer, so a rewritten file shows its new schema on the next load, and
+  * a column the new file lacks fails analysis instead of reading as NULL.
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` for one parquet file or an unpartitioned,
+    * Spark-written directory, without the schema-inference job.
+    *
+    * The schema comes from the footer of the file itself or, for a
+    * directory, of its first data file in name order (skipping `_`- and
+    * `.`-prefixed names) — the file Spark's non-merging inference reads.
+    * As in Spark's own footer read, a footer carrying Spark's row-metadata
+    * key yields that schema; otherwise the parquet schema is converted
+    * under the session's current conf (so `nanosAsLong`, binary-as-string
+    * and NTZ inference apply exactly as they would to inference).
+    *
+    * A path with no data file at its top level falls back to
+    * `spark.read.parquet`: a missing path or a glob then raises Spark's own
+    * error, and a partitioned (`key=value`) directory keeps the partition
+    * discovery that types its partition columns.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  private def footerSchema(spark: SparkSession,
+      path: String): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val file = Try(fs.getFileStatus(p)).toOption.flatMap { st =>
+      if (!st.isDirectory) Some(st)
+      else fs.listStatus(p).filter { f =>
+        val n = f.getPath.getName
+        f.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }.sortBy(_.getPath.getName).headOption
+    }
+    file.map { st =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromStatus(st, conf),
+        HadoopReadOptions.builder(conf)
+          .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS)
+          .build())
+      val meta = try reader.getFileMetaData finally reader.close()
+      Option(meta.getKeyValueMetaData
+          .get(ParquetReadSupport.SPARK_METADATA_KEY))
+        .flatMap(json => Try(DataType.fromJson(json)).toOption)
+        .collect { case s: StructType => s }
+        .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+          .convert(meta.getSchema))
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

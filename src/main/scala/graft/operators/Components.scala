@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Distributed connected components over an undirected edge list — the
   * cluster-assembly step behind near-dup dedup (the declared
@@ -122,6 +123,15 @@ object Components {
       checkpointDir: Option[String] = None): DataFrame = {
     require(idCol != "component",
       "idCol must not be named 'component' (the reserved output column)")
+    // the Φ certificate sums ids as exact decimals: a non-integral id
+    // would cast to NULL, coalesce to 0 and leave a count-only check
+    for ((df, c) <- Seq(edges -> srcCol, edges -> dstCol, vertices -> idCol))
+      df.schema(c).dataType match {
+        case ByteType | ShortType | IntegerType | LongType =>
+        case t => throw new IllegalArgumentException(
+          s"connectedComponents: id column '$c' must be an integral type, " +
+            s"got ${t.simpleString}")
+      }
     checkpointDir.foreach(
       edges.sparkSession.sparkContext.setCheckpointDir)
     // Every materialized frame in the round loop is immediately consumed

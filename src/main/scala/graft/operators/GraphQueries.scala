@@ -522,9 +522,9 @@ ORDER BY p_partkey"""
         val n = java.nio.file.Files.readString(
           java.nio.file.Paths.get(s"$r/node_count.txt")).trim.toLong
         pagerankFrom(
-          s.read.parquet(s"$r/transition")
+          Tables.parquet(s, s"$r/transition")
             .transform(graft.Caches.scoped),
-          s.read.parquet(s"$r/nodes"),
+          Tables.parquet(s, s"$r/nodes"),
           n, useBroadcast = n < BroadcastNodeLimit)
       },
       Some(pagerankOracle),
@@ -545,9 +545,9 @@ ORDER BY p_partkey"""
         val n = java.nio.file.Files.readString(
           java.nio.file.Paths.get(s"$r/node_count.txt")).trim.toLong
         labelRoundsFrom(
-          s.read.parquet(s"$r/transition").select("src", "dst", "w")
+          Tables.parquet(s, s"$r/transition").select("src", "dst", "w")
             .transform(graft.Caches.scoped),
-          s.read.parquet(s"$r/nodes"),
+          Tables.parquet(s, s"$r/nodes"),
           useBroadcast = n < BroadcastNodeLimit)
       },
       Some(labelPropOracle),
@@ -563,7 +563,7 @@ ORDER BY p_partkey"""
       (s, d) => {
         GraphServe.prepare(s, d)
         triangleCcOver(
-          s.read.parquet(s"${GraphServe.root(d)}/transition")
+          Tables.parquet(s, s"${GraphServe.root(d)}/transition")
             .select("src", "dst")
             .transform(graft.Caches.scoped))
       },

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryDef
+import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -487,7 +487,7 @@ WHERE rn <= ${SimilarityQueries.K} ORDER BY q_id, rank"""
     */
   private[operators] def buildIvfPq(s: SparkSession, ivfPath: String,
       path: String): Unit = {
-    val cent = s.read.parquet(s"$ivfPath/centroids")
+    val cent = Tables.parquet(s, s"$ivfPath/centroids")
     val res = residualsOf(
       s.read.parquet(s"$ivfPath/assignment")
         .select(col("vec_id"), col("qe"), col("bucket").cast("bigint")
@@ -651,8 +651,8 @@ WHERE rn <= ${SimilarityQueries.K} ORDER BY q_id, rank"""
         SimilarityQueries.prepareServe(s, d)
         val root = SimilarityQueries.serveRoot(d)
         topKOf(adcRankedFrom(s, d,
-          s.read.parquet(s"$root/pq/books"),
-          s.read.parquet(s"$root/pq/codes")))
+          Tables.parquet(s, s"$root/pq/books"),
+          Tables.parquet(s, s"$root/pq/codes")))
       },
       Some(adcSearchSql),
       "PQ serve path: ADC search from persisted books + codes"),
@@ -696,7 +696,7 @@ WHERE rn <= ${SimilarityQueries.K} ORDER BY q_id, rank"""),
         val root = SimilarityQueries.serveRoot(d)
         ivfpqFrom(s, d,
           SimilarityQueries.centroidsFrom(s, s"$root/ivf"),
-          s.read.parquet(s"$root/pqres/books"),
+          Tables.parquet(s, s"$root/pqres/books"),
           s.read.parquet(s"$root/pqres/codes")
             .select(col("vec_id"), col("enc"),
               col("bucket").cast("bigint").as("bucket")))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -160,44 +161,44 @@ object AuditServe {
 
   /** The persisted LSH band-collision candidate pairs (doc_a, doc_b). */
   def candidatesFrom(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${root(dir)}/lshcand")
+    Tables.parquet(s, s"${root(dir)}/lshcand")
 
   /** The persisted per-doc quality scores
     * (doc_id, source, n_tokens, quality_score).
     */
   def qualityFrom(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${root(dir)}/quality")
+    Tables.parquet(s, s"${root(dir)}/quality")
 
   /** The persisted x14 near-dup clusters (doc_id, cluster_id). */
   def clustersFrom(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${root(dir)}/clusters")
+    Tables.parquet(s, s"${root(dir)}/clusters")
 
   /** The persisted exact blocked n-gram Jaccard pairs
     * (doc_a, doc_b, jaccard ≥ 0.05 — the x08 result; consumers filter
     * tighter thresholds from it).
     */
   def jaccardFrom(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${root(dir)}/ngjacc")
+    Tables.parquet(s, s"${root(dir)}/ngjacc")
 
   /** The persisted BPE merge table (round, sym_a, sym_b, merged, n) —
     * the trainer's output, i.e. the tokenizer model file.
     */
   def mergesFrom(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${root(dir)}/bpemerges")
+    Tables.parquet(s, s"${root(dir)}/bpemerges")
 
   /** The persisted unigram piece table (piece, cnt, lp_micro) — the
     * x97 trainer's output, the `bpemerges` sibling model file.
     */
   def piecesFrom(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${root(dir)}/unipieces")
+    Tables.parquet(s, s"${root(dir)}/unipieces")
 
   /** The persisted full-vocabulary inverted index
     * (lang, token, doc_id, tf) — the BM25 serve row's postings.
     */
   def postingsFrom(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${root(dir)}/postings")
+    Tables.parquet(s, s"${root(dir)}/postings")
 
   /** The persisted per-doc token lengths (lang, doc_id, dl). */
   def doclensFrom(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${root(dir)}/doclens")
+    Tables.parquet(s, s"${root(dir)}/doclens")
 }

@@ -261,7 +261,7 @@ object SimilarityQueries {
     */
   private[operators] def centroidsFrom(s: SparkSession,
       indexPath: String): DataFrame = {
-    val cent = s.read.parquet(s"$indexPath/centroids")
+    val cent = Tables.parquet(s, s"$indexPath/centroids")
     val mf = countManifest(indexPath)
     if (java.nio.file.Files.exists(mf))
       centCounts.put(cent,
@@ -769,7 +769,7 @@ clusters AS (SELECT vec_id, label AS cluster_id FROM lv$EmbCcRounds)"""
   private def twoLevelRouteServe(s: SparkSession, d: String): DataFrame = {
     prepareServe(s, d)
     twoLevelRouteOver(s, d, centroidsFrom(s, s"${serveRoot(d)}/ivf"),
-      s.read.parquet(s"${serveRoot(d)}/coarse/centroids"))
+      Tables.parquet(s, s"${serveRoot(d)}/coarse/centroids"))
   }
 
   /** Train the coarse router layer: Lloyd over the fine centroid table,
@@ -1108,7 +1108,7 @@ WHERE rn <= $K ORDER BY q_id, rank"""
     * in-query x41 derivation (ClusterIndexSpec pins it).
     */
   def clustersFrom(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(path)
+    Tables.parquet(s, path)
 
   /** x64's purity audit served from persisted clusters — zero
     * re-derivation; same reduction as the declared query.
@@ -1212,7 +1212,7 @@ FROM fba GROUP BY bucket ORDER BY bucket"""
         col("bucket").cast("bigint").as("bucket"))
     val probePairs = cslsPairs(
       assigned.filter(col("vec_id") < NQueries), assigned)
-    cslsFinal(probePairs, s.read.parquet(rmPath))
+    cslsFinal(probePairs, Tables.parquet(s, rmPath))
   }
 
   /** Serve nprobe top-k for `dir`'s probe set from a persisted index —

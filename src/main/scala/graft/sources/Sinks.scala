@@ -36,22 +36,13 @@ object Sinks {
     * the rest untouched — the declarative form of the reference's
     * drop-refreshed-months-then-concat (`extract_growth_data.py:155-171`),
     * and the only shape that survives 100 TB of history: the rewrite cost
-    * is proportional to the refreshed months, not the table.
+    * is proportional to the refreshed months, not the table. The mode is
+    * a per-write option, so the session's conf is never touched.
     */
   def refreshPartitions(df: DataFrame, path: String,
-      partitionCol: String): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf
-      .getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try df.write.mode("overwrite").partitionBy(partitionCol).parquet(path)
-    finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None =>
-        spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+      partitionCol: String): Unit =
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCol).parquet(path)
 
   /** Remove a managed-table location that lost its catalog entry, so a
     * following `saveAsTable` cannot hit LOCATION_ALREADY_EXISTS
@@ -125,7 +116,7 @@ object Sinks {
   }
 
   private def countParquetRows(spark: SparkSession, path: String): Long =
-    try spark.read.parquet(path).count()
+    try graft.Tables.parquet(spark, path).count()
     catch { case _: org.apache.spark.sql.AnalysisException => 0L }
 
   /** Streaming upsert: drain a file-source backlog and refresh exactly the
@@ -214,6 +205,10 @@ object Sinks {
     require(!fs.exists(bak),
       s"compact: stale $bak exists (prior compaction crashed mid-swap); " +
         "resolve it before compacting again")
+    // Spark's own inference, not graft.Tables.parquet: the dataset is the
+    // caller's, appended to by any writer, and compaction must rewrite
+    // exactly what a plain read of it sees (summary files, partition
+    // discovery); one inference job is noise beside a full rewrite
     spark.read.parquet(p.toString).repartition(nFiles)
       .write.mode("overwrite").parquet(tmp.toString)
     // rename signals failure via its RETURN VALUE on HDFS-like
@@ -397,7 +392,11 @@ object Sinks {
     readSnapshot(spark, root, v)
   }
 
-  /** Read a specific retained snapshot version. */
+  /** Read a specific retained snapshot version. Keeps Spark's own
+    * inference rather than graft.Tables.parquet: a version directory holds
+    * whatever frame its publisher wrote, which may be laid out for
+    * partition discovery, and snapshot reads are off the per-query path.
+    */
   def readSnapshot(spark: SparkSession, root: String,
       version: Long): DataFrame =
     spark.read.parquet(s"$root/v=$version")

@@ -65,9 +65,9 @@ object EventStream {
 
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // probe the physical ts spelling (bigint nanos vs native timestamp);
-    // schema-only batch read, no data scan
-    val tsType = spark.read.parquet(s"$dir/events.parquet")
+    // probe the physical ts spelling (bigint nanos vs native timestamp)
+    // from the file footer; no Spark job
+    val tsType = graft.Tables.parquet(spark, s"$dir/events.parquet")
       .schema("ts").dataType
     // The file stream source wants a directory; testdata ships one file per
     // table in the sf dir, so scan the dir with a glob pinned to events.

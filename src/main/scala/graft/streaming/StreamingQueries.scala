@@ -573,7 +573,7 @@ FROM t GROUP BY lang ORDER BY lang"""),
       (s, d) => {
         import graft.operators.{PqQueries, SimilarityQueries}
         SimilarityQueries.prepareServe(s, d)
-        val books = s.read.parquet(
+        val books = graft.Tables.parquet(s,
           s"${SimilarityQueries.serveRoot(d)}/pq/books")
         // spread before the per-vector M×Ks argmin encode fold (the
         // st10 note): otherwise the whole encode runs in the one-task
@@ -607,7 +607,7 @@ FROM t GROUP BY lang ORDER BY lang"""),
         // entry point, so the native dot_long registration happens here
         graft.GraftExtensions.ensureInstalled(s)
         SimilarityQueries.prepareServe(s, d)
-        val cent = s.read.parquet(
+        val cent = graft.Tables.parquet(s,
           s"${SimilarityQueries.serveRoot(d)}/ivf/centroids")
         // spread before the per-vector √n-centroid argmax fold (the
         // st10 note)

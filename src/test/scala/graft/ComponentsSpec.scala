@@ -68,6 +68,22 @@ class ComponentsSpec extends SparkSpec {
     assert(e.getMessage.contains("component"))
   }
 
+  test("a non-integral id column fails up front, naming the column") {
+    // a string id would cast to NULL inside the decimal Φ sum and
+    // silently reduce the certificate to a count-only check
+    val edges = Seq(("a", "b"), ("b", "c")).toDF("src", "dst")
+    val verts = Seq("a", "b", "c").toDF("id")
+    val e = intercept[IllegalArgumentException] {
+      Components.connectedComponents(edges, "src", "dst", verts, "id", 4)
+    }
+    assert(e.getMessage.contains("'src'") && e.getMessage.contains("string"))
+    val longEdges = Seq((1L, 2L)).toDF("src", "dst")
+    val e2 = intercept[IllegalArgumentException] {
+      Components.connectedComponents(longEdges, "src", "dst", verts, "id", 4)
+    }
+    assert(e2.getMessage.contains("'id'"))
+  }
+
   test("random graphs match a reference union-find (seeded)") {
     val rng = new scala.util.Random(42)
     for (trial <- 1 to 5) {

@@ -69,17 +69,14 @@ class IvfIndexSpec extends SparkSpec {
     val coarseDir = new java.io.File(
       operators.SimilarityQueries.serveRoot(sf) + "/coarse/centroids")
     assert(coarseDir.isDirectory, coarseDir.toString)
-    // zero COMPUTE jobs at construction: no training folds, no counts.
-    // The only jobs allowed are parquet footer/schema reads ("parquet
-    // at" stages — one constant-cost footer per artifact, the same
-    // plan-construction I/O every serve row pays).
+    // zero jobs at construction: no training folds, no counts, and no
+    // schema-inference jobs either (artifact schemas come from the
+    // parquet footers, read on the driver by Tables.parquet)
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        j.stageInfos.map(_.name)
-          .filterNot(_.startsWith("parquet at"))
-          .foreach(jobs.add)
+        j.stageInfos.map(_.name).foreach(jobs.add)
     }
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -87,7 +84,7 @@ class IvfIndexSpec extends SparkSpec {
       org.apache.spark.ListenerBusDrain.waitUntilEmpty(
         spark.sparkContext, 30000L)
       assert(jobs.isEmpty,
-        s"x99s plan construction ran compute stages: $jobs")
+        s"x99s plan construction ran jobs: $jobs")
     } finally spark.sparkContext.removeSparkListener(listener)
     // identical rows to the declared x99 (build-time coarse training is
     // deterministic in the fine table, so persisting it changes nothing)

@@ -28,12 +28,17 @@ class SinksSpec extends SparkSpec {
 
   test("S9 dynamic partition overwrite touches only refreshed partitions") {
     val out = tmp("s9") + "/t"
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(modeKey)
     val history = Seq(("2025_01", 1), ("2025_02", 2), ("2025_03", 3))
       .toDF("month", "v")
     Sinks.refreshPartitions(history, out, "month")
     // refresh only Feb; Jan + Mar survive untouched
     val refresh = Seq(("2025_02", 20), ("2025_02", 21)).toDF("month", "v")
     Sinks.refreshPartitions(refresh, out, "month")
+    // the dynamic mode is a per-write option: the shared session's conf
+    // is the same after the call as before it
+    assert(spark.conf.getOption(modeKey) == modeBefore)
     val got = spark.read.parquet(out)
       .select("month", "v").as[(String, Int)].collect().sorted.toSeq
     assert(got == Seq(("2025_01", 1), ("2025_02", 20), ("2025_02", 21),
