@@ -156,7 +156,7 @@ object Graft {
     def simhashNearDup(spark: SparkSession, dir: String): DataFrame =
       run("x13_simhash_neardup", spark, dir)
     /** Near-dup clusters: LSH candidate pairs assembled into connected
-      * components (min-label propagation + pointer jumping) — one
+      * components (alternating star contraction) — one
       * canonical `cluster_id` (= min member) per component.
       */
     def clusters(spark: SparkSession, dir: String): DataFrame =
@@ -199,8 +199,8 @@ object Graft {
       run("x70_prefix_jaccard", spark, dir)
   }
 
-  /** Connected components over any undirected edge list — contracted
-    * BSP min-label propagation with pointer jumping and early stop; pass
+  /** Connected components over any undirected edge list — alternating
+    * star contraction, stopped at its certified fixpoint; pass
     * `checkpointDir` on a real cluster for reliable per-round
     * checkpoints (see [[operators.Components.connectedComponents]]).
     */

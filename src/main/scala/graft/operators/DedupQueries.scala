@@ -582,14 +582,18 @@ cand AS (
 )"""
   }
 
-  /** Rounds of min-label propagation + pointer jumping in x14. Pointer
-    * jumping only helps when the current minimum sits far along the path,
-    * so the binding constraint is edge-hop distance: simulated on the
-    * real pair graphs, the fixpoint needs 10 rounds at sf0.01 (a sparse
-    * 408-doc chain component, 15 hops deep) and 3 at sf0.1 (denser ⇒
-    * shallower). 12 = worst observed + margin; `DedupClustersSpec`
-    * asserts the fixpoint so a deeper regenerated corpus fails loudly
-    * rather than mislabeling quietly.
+  /** x14's round bound, in two roles. It is the DuckDB oracle's unroll
+    * length: the oracle spells components as CcRounds rounds of
+    * min-label propagation + pointer jumping, whose fixpoint is bound by
+    * edge-hop distance — simulated on the real pair graphs it needs 10
+    * rounds at sf0.01 (a sparse 408-doc chain component, 15 hops deep)
+    * and 3 at sf0.1 (denser ⇒ shallower). It is also the `maxRounds` cap
+    * of the Spark loop ([[Components.connectedComponents]], alternating
+    * star contraction), which stops at its certified fixpoint in fewer
+    * rounds and throws if the cap binds first. 12 = worst observed
+    * oracle depth + margin; `DedupClustersSpec` asserts the fixpoint so
+    * a deeper regenerated corpus fails loudly rather than mislabeling
+    * quietly.
     */
   private val CcRounds = 12
 
@@ -1270,23 +1274,24 @@ ORDER BY doc_a, doc_b"""),
     // ── Near-dup CLUSTERS: the LSH candidate pairs assembled into
     // connected components, which is what a dedup pipeline actually keeps
     // (one canonical doc per component). The iterative core lives in
-    // [[Components.connectedComponents]] (min-label propagation + pointer
-    // jumping, early-stopped at the fixpoint, rounds CONTRACTED to pair
-    // endpoints — singleton docs never enter a shuffle). The oracle
-    // unrolls a FIXED CcRounds over the FULL vertex set: labels only
-    // decrease and every step is a deterministic min, so the early-stop
-    // + contraction still hash-match it exactly — post-fixpoint rounds
-    // are identities and isolated vertices never change label
-    // (convergence on this corpus is separately asserted by
-    // DedupClustersSpec). Cluster runs: thread a checkpointDir through
-    // connectedComponents for reliable per-round checkpoints.
+    // [[Components.connectedComponents]] (alternating star contraction,
+    // stopped at its certified fixpoint, rounds run on pair endpoints
+    // only — singleton docs never enter a shuffle). The oracle unrolls a
+    // FIXED CcRounds of min-label propagation + pointer jumping over the
+    // FULL vertex set. Both reach the same fixpoint, every component
+    // labelled with its minimum member, so they hash-match exactly:
+    // post-fixpoint oracle rounds are identities and isolated vertices
+    // never change label (convergence on this corpus is separately
+    // asserted by DedupClustersSpec). Cluster runs: thread a
+    // checkpointDir through connectedComponents for reliable per-round
+    // checkpoints.
     "x14_dedup_clusters" -> QueryDef(
       (s, d) => docClusters(s, d)
         .withColumn("cluster_size", count(lit(1)).over(
           org.apache.spark.sql.expressions.Window.partitionBy("cluster_id")))
         .orderBy("doc_id"),
       Some(x14Oracle),
-      "LSH pairs → connected components via min-label + pointer jumping"),
+      "LSH pairs → connected components via alternating star contraction"),
 
     // ── x14 from the persisted cluster artifact ([[AuditServe]] —
     // x42s/x43s already read it; this row is the cluster table ITSELF

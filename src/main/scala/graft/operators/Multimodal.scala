@@ -469,9 +469,9 @@ object Multimodal {
       .orderBy("doc_id")
   }
 
-  /** Pointer-jumping rounds for [[phashClusters]] (and its oracle's
-    * fixed unroll) — log-depth covers any plausible near-dup chain;
-    * the engine side stops at the fixpoint anyway.
+  /** The oracle's fixed pointer-jumping unroll for [[phashClusters]] and
+    * the engine loop's `maxRounds` cap — log-depth covers any plausible
+    * near-dup chain; the engine side stops at its fixpoint anyway.
     */
   private[operators] val PhashCcRounds = 12
 }

@@ -13,7 +13,7 @@ class ComponentsSpec extends SparkSpec {
   import spark.implicits._
 
   test("chains, separate components, and isolated vertices") {
-    // 1-2-3-4-5 is a 4-hop chain (exercises pointer jumping),
+    // 1-2-3-4-5 is a 4-hop chain (needs more than one contraction round),
     // 10-11 a second component, 7/8/9 isolated singletons
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
       .toDF("src", "dst")
@@ -82,6 +82,17 @@ class ComponentsSpec extends SparkSpec {
       Components.connectedComponents(longEdges, "src", "dst", verts, "id", 4)
     }
     assert(e2.getMessage.contains("'id'"))
+  }
+
+  test("a cap below the fixpoint throws instead of returning a partial labelling") {
+    // one round cannot contract a 16-vertex chain to a star
+    val edges = (1L until 16L).map(i => (i, i + 1)).toDF("src", "dst")
+    val verts = (1L to 16L).toDF("id")
+    val e = intercept[IllegalStateException] {
+      Components.connectedComponents(edges, "src", "dst", verts, "id",
+        maxRounds = 1)
+    }
+    assert(e.getMessage.contains("raise maxRounds"), e.getMessage)
   }
 
   test("random graphs match a reference union-find (seeded)") {

@@ -48,13 +48,7 @@ object ScaleGen {
     val out = args.headOption.getOrElse("/tmp/scaledata")
     val mults = args.lift(1).getOrElse("1,10")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession.build()
     mults.foreach(m => write(spark, s"$out/x$m", m))
     spark.stop()
     println(s"[scalegen] wrote $out (multipliers ${mults.mkString(",")})")

@@ -34,13 +34,7 @@ object SkewGen {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/skewdata")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession.build()
     write(spark, out)
     spark.stop()
     println(s"[skewgen] wrote $out")

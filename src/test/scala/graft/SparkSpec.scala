@@ -3,19 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared test session: one local SparkSession per suite. */
+/** Shared test session: `local[4]` with the harness confs. The session
+  * is `getOrCreate`d, so every suite in the JVM shares it, and the first
+  * one fixes the static confs for all of them.
+  */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // registry-sized codegen-class cache + no per-run artifact
-    // classloaders (see Bench.scala's notes); STATIC confs, so the
-    // first suite's session fixes them JVM-wide
-    .config("spark.sql.codegen.cache.maxEntries", 8192)
-    .config("spark.sql.artifact.isolation.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = HarnessSession.build(4)
 
   val sf: String = "/root/testdata/sf0.001"
 }
