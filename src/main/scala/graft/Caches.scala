@@ -1,76 +1,45 @@
 package graft
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
-/** Query-scoped cache tracking: every `persist` a query builder takes is
-  * paired with an `unpersist` when the query's scope closes, so a
-  * long-lived session embedding the registry (the [[Graft]] facade's
-  * advertised use) does not accumulate MEMORY_AND_DISK blocks per query
-  * executed — and does not depend on a harness-side
-  * `spark.catalog.clearCache()` to stay bounded.
+/** Query-scoped cache tracking: every block a query builder materializes
+  * — a `persist` or a `localCheckpoint` — is released when the query's
+  * scope closes, so a long-lived session embedding the registry (the
+  * [[Graft]] facade's advertised use) does not accumulate
+  * MEMORY_AND_DISK blocks per query executed — and does not depend on a
+  * harness-side `spark.catalog.clearCache()` to stay bounded.
   *
-  * Mechanics: builders persist through [[scoped]] (a drop-in
+  * The single rule: builders persist through [[scoped]] (a drop-in
   * `.transform(Caches.scoped)` where `.persist(MEMORY_AND_DISK)` used to
-  * be). When a [[scope]] is active on the thread, the frame is
-  * registered and unpersisted (non-blocking) when the scope closes —
-  * AFTER the scope body has consumed the result, so caches still serve
-  * every multi-branch read inside the query. With no active scope the
-  * call degrades to a bare persist (ad-hoc notebook use keeps its
-  * caches; `spark.catalog.clearCache()` remains the manual lever).
+  * be) and checkpoint through [[checkpointed]] (where
+  * `.localCheckpoint(eager)` used to be). Each call registers a release
+  * action with the innermost [[scope]] open on the thread, and the scope
+  * runs its actions (non-blocking unpersists) when it closes — AFTER the
+  * scope body has consumed the result, so caches still serve every
+  * multi-branch read inside the query. A scope releases exactly what it
+  * registered, whatever other scopes are open on other threads. With no
+  * active scope both calls degrade to the bare Spark operation (ad-hoc
+  * notebook use keeps its caches; `spark.catalog.clearCache()` remains
+  * the manual lever for persists).
   *
-  * The scope close also sweeps RAW persisted RDDs that appeared during
-  * the body and survived the tracked unpersists — that catches the
-  * eager `localCheckpoint` materializations the iterative queries use
-  * (graph rounds, BPE training, BSP components), whose backing RDDs are
-  * persisted by Spark without a `Dataset.unpersist` handle.
   * CacheScopeSpec pins `sparkContext.getPersistentRDDs` empty after
-  * scoped runs of every persist-taking query family.
-  *
-  * Concurrency: scopes are thread-local, but `getPersistentRDDs` is
-  * context-global — a closing scope must NOT unpersist a concurrent
-  * scope's mid-flight persists (silent recompute) or its
-  * `localCheckpoint` backings (whose lineage is truncated — a sweep
-  * there fails the victim with missing-checkpoint-block errors, not a
-  * recompute). So the raw-RDD sweep is DEFERRED while other scopes
-  * overlap: each closing scope banks its orphan candidates guarded by
-  * the scope ids still open at banking time, and every close sweeps the
-  * orphans whose guards have all closed. Tracked [[scoped]] frames
-  * are still released by their own scope immediately (each thread only
-  * touches its own), so under concurrency the only blocks that outlive
-  * their query are untracked checkpoint backings, and only until the
-  * scopes that overlapped them drain — a server with continuously
-  * overlapping scopes still frees each orphan incrementally, so the
-  * bank stays bounded by the width of any single overlap window. One caveat stands: a bare `.persist` taken on
-  * a NON-scoped thread while any scope is open is indistinguishable
-  * from an orphan and will be swept with the bank — inside a shared
-  * long-lived session, run queries through scopes (or [[Graft.runScoped]])
-  * uniformly rather than mixing in unmanaged persists.
+  * scoped runs of every persist- or checkpoint-taking query family, and
+  * that no other `src/main` file persists or checkpoints directly.
   */
 object Caches {
 
-  private val scopes =
-    new ThreadLocal[List[scala.collection.mutable.ArrayBuffer[Dataset[_]]]] {
-      override def initialValue: List[
-        scala.collection.mutable.ArrayBuffer[Dataset[_]]] = Nil
-    }
+  private type Buf = scala.collection.mutable.ArrayBuffer[() => Unit]
 
-  /** Open-scope bookkeeping for the deferred raw-RDD sweep: the ids of
-    * scopes currently open across ALL threads, plus banked orphan RDD
-    * ids each guarded by the scope ids that were open when it was
-    * banked. An orphan is safe to sweep once every guard scope has
-    * closed — only a scope already open at banking time could own the
-    * block — so the bank stays bounded by the overlap window even in a
-    * server with continuously overlapping scopes (new scopes never
-    * extend an existing orphan's guard). Guarded by [[lock]]; RDD ids
-    * are per-SparkContext (one live context per JVM in every supported
-    * deployment).
-    */
-  private val lock = new Object
-  private var nextScopeId = 0L
-  private val openIds = scala.collection.mutable.Set.empty[Long]
-  private val bankedOrphans =
-    scala.collection.mutable.Map.empty[Int, Set[Long]]
+  private val scopes = new ThreadLocal[List[Buf]] {
+    override def initialValue: List[Buf] = Nil
+  }
+
+  private def register(release: () => Unit): Unit = scopes.get() match {
+    case head :: _ => head += release
+    case Nil       => ()
+  }
 
   /** Persist at MEMORY_AND_DISK (spills, never OOMs) and register with
     * the innermost active scope. Usage: `df.transform(Caches.scoped)`.
@@ -80,61 +49,36 @@ object Caches {
 
   def scopedAs[T](ds: Dataset[T], level: StorageLevel): Dataset[T] = {
     ds.persist(level)
-    scopes.get() match {
-      case head :: _ => head += ds
-      case Nil       => ()
-    }
+    register(() => ds.unpersist(blocking = false))
     ds
   }
 
+  /** `ds.localCheckpoint(eager)` with its backing RDD (the returned
+    * frame's [[LogicalRDD]]) registered with the innermost active scope.
+    * A lazy checkpoint materializes in the first job that reads it.
+    */
+  def checkpointed[T](ds: Dataset[T], eager: Boolean = true): Dataset[T] = {
+    val ck = ds.localCheckpoint(eager)
+    val backing = ck.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+    register(() => backing.unpersist(blocking = false))
+    ck
+  }
+
   /** Run `body` with cache tracking: frames persisted through [[scoped]]
-    * inside it are unpersisted on exit, then any other persisted RDD
-    * that appeared during the body (localCheckpoint backings, untracked
-    * persists) is swept — immediately when this is the only open scope,
-    * deferred to the last closer when scopes overlap (see the class doc:
-    * a global sweep under concurrency would kill a sibling scope's
-    * mid-flight blocks). Nest-safe: an inner scope releases only its own
-    * tracked additions; the raw-RDD bank drains when the OUTERMOST
-    * scopes have all closed.
+    * and checkpointed through [[checkpointed]] inside it are released on
+    * exit. Nest-safe: an inner scope releases only its own registrations.
+    * `spark` names the session the scope serves; each release action
+    * carries its own handle.
     */
   def scope[T](spark: SparkSession)(body: => T): T = {
-    val sc = spark.sparkContext
-    val (myId, before) = lock.synchronized {
-      nextScopeId += 1
-      openIds += nextScopeId
-      (nextScopeId, sc.getPersistentRDDs.keySet)
-    }
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
+    val buf: Buf = scala.collection.mutable.ArrayBuffer.empty
     scopes.set(buf :: scopes.get())
     try body
     finally {
       scopes.set(scopes.get() match { case _ :: t => t; case Nil => Nil })
-      buf.foreach { ds =>
-        try ds.unpersist(blocking = false)
+      buf.foreach { release =>
+        try release()
         catch { case _: Throwable => () }
-      }
-      lock.synchronized {
-        openIds -= myId
-        // bank this scope's orphan candidates, guarded by the scopes
-        // still open NOW — the only ones that could own the blocks
-        val guard = openIds.toSet
-        sc.getPersistentRDDs.keySet.diff(before).foreach { id =>
-          if (!bankedOrphans.contains(id)) bankedOrphans(id) = guard
-        }
-        // incremental drain: sweep every orphan whose guards all closed
-        val ripe = bankedOrphans.collect {
-          case (id, g) if !g.exists(openIds.contains) => id
-        }
-        if (ripe.nonEmpty) {
-          val live = sc.getPersistentRDDs
-          ripe.foreach { id =>
-            bankedOrphans -= id
-            live.get(id).foreach { rdd =>
-              try rdd.unpersist(blocking = false)
-              catch { case _: Throwable => () }
-            }
-          }
-        }
       }
     }
   }

@@ -243,7 +243,6 @@ object Graft {
         indexPath: String): DataFrame =
       operators.SimilarityQueries.searchIndex(spark, dir, indexPath)
 
-    /** Exact per-dimension moments (whitening/normalization input). */
     /** Derive + persist the x41 semantic-dedup clusters once (the
       * train-once/serve-many path mirroring buildIndex/searchIndex).
       */
@@ -260,6 +259,7 @@ object Graft {
     /** Top principal component by integer power iteration (x74). */
     def pcaPower(spark: SparkSession, dir: String): DataFrame =
       run("x74_pca_power", spark, dir)
+    /** Exact per-dimension moments (whitening/normalization input). */
     def dimStats(spark: SparkSession, dir: String): DataFrame =
       run("x59_embed_dim_stats", spark, dir)
 
@@ -538,13 +538,13 @@ object Graft {
     * CONTRACT — `consume` must fully drain the frame before returning.
     * If it returns the lazy DataFrame itself (or anything still holding
     * one), a LATER action on it does not merely recompute: the scope has
-    * already swept the query's `localCheckpoint` backings, whose lineage
-    * is truncated, so the action fails with missing-checkpoint-block
-    * errors (`SparkException: Checkpoint block ... not found`). Return
-    * materialized results — collected rows, counts, a completed write —
-    * never the frame. Safe to call concurrently from multiple threads:
-    * overlapping scopes defer the shared raw-RDD sweep to the last
-    * closer (see [[Caches]]).
+    * already released the query's [[Caches.checkpointed]] backings,
+    * whose lineage is truncated, so the action fails with
+    * missing-checkpoint-block errors (`SparkException: Checkpoint block
+    * ... not found`). Return materialized results — collected rows,
+    * counts, a completed write — never the frame. Safe to call
+    * concurrently from multiple threads: each scope releases exactly the
+    * blocks its own query registered, when it closes (see [[Caches]]).
     */
   def runScoped[T](name: String, spark: SparkSession, dir: String)(
       consume: DataFrame => T): T =

@@ -160,7 +160,7 @@ object BpeQueries {
         // round's pair count starts from materialized rows, not from a
         // re-evaluation of every previous round's fold
         if (foldsSinceCkpt >= checkpointEvery && r < rounds) {
-          words = words.localCheckpoint(true)
+          words = graft.Caches.checkpointed(words)
           foldsSinceCkpt = 0
         }
         r += 1

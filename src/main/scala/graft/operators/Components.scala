@@ -143,7 +143,7 @@ object Components {
     // saving, which would double every round.
     def materializeOnProbe(df: DataFrame): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint(true)
-      else df.localCheckpoint(false)
+      else graft.Caches.checkpointed(df, eager = false)
     // Mid-round frames (the large-star output) are consumed twice within
     // the SAME probe job, so a lazy local checkpoint makes the second
     // read hit blocks for free. In RELIABLE mode an (eager) checkpoint
@@ -152,7 +152,8 @@ object Components {
     // recompute is the cheaper side of the trade (the min-table exchange
     // below it is deduplicated by ReusedExchange either way).
     def materializeMid(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df else df.localCheckpoint(false)
+      if (checkpointDir.isDefined) df
+      else graft.Caches.checkpointed(df, eager = false)
     // internal working names so arbitrary caller column names (including
     // "id"/"label") can never collide with the loop's plumbing
     val u = "__cc_u"

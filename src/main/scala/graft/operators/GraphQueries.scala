@@ -210,7 +210,7 @@ e AS (
     // LITERAL — exactly what the oracle's scalar subquery evaluates to.
     val nodes = wout.filter(col("wout") > 0)
       .select(col("src").as("node"))
-      .localCheckpoint(true)
+      .transform(graft.Caches.checkpointed(_))
     (ew, nodes, n, useBroadcast)
   }
 
@@ -247,7 +247,7 @@ e AS (
         .select(col("node"),
           expr(s"($base * 15) div 100 + (85 * contrib) div 100")
             .as("rank"))
-      rank = if (r < PrRounds) next.localCheckpoint(true) else next
+      rank = if (r < PrRounds) graft.Caches.checkpointed(next) else next
     }
     rank.select(col("node").as("p_partkey"), col("rank").as("rank_fp"))
       .orderBy(col("rank_fp").desc, col("p_partkey"))
@@ -327,7 +327,7 @@ LIMIT 100"""
     // instead of the 2.4M-row pair table
     val nodes = sets.filter(size(col("pks")) >= 2)
       .select(explode(col("pks")).as("node")).distinct()
-      .localCheckpoint(true)
+      .transform(graft.Caches.checkpointed(_, eager = false))
     // same automatic flip as partPagerank: below the limit each round
     // broadcasts the |nodes|-row label table; past it the label join
     // runs as a src-keyed shuffle join (the persisted edge cache is the
@@ -597,7 +597,9 @@ object GraphServe {
 
   def prepare(s: SparkSession, dir: String): Unit = synchronized {
     val r = root(dir)
-    if (!Serve.complete(r, ArtifactDirs)) {
+    if (!Serve.complete(r, ArtifactDirs)) graft.Caches.scope(s) {
+      // the scope releases the build's caches; a clearCache here would
+      // also drop those of the enclosing query and of concurrent scopes
       val (ew, nodes, n, _) = GraphQueries.transitionTable(
         s, dir, GraphQueries.BroadcastNodeLimit, None)
       // partitioned on src: each round's state join reads it keyed the
@@ -608,7 +610,6 @@ object GraphServe {
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$r/node_count.txt"), n.toString)
       Serve.stamp(r)
-      s.catalog.clearCache() // build-side persists must not leak
     }
   }
 }

@@ -135,7 +135,9 @@ object AuditServe {
     */
   def prepare(s: SparkSession, dir: String): Unit = synchronized {
     val r = root(dir)
-    if (!Serve.complete(r, ArtifactDirs)) {
+    if (!Serve.complete(r, ArtifactDirs)) graft.Caches.scope(s) {
+      // the scope releases the build's caches; a clearCache here would
+      // also drop those of the enclosing query and of concurrent scopes
       DedupQueries.minhashCandidates(s, dir)
         .write.mode("overwrite").parquet(s"$r/lshcand")
       TextQueries.qualityScored(s, dir)
@@ -155,7 +157,6 @@ object AuditServe {
       postings.write.mode("overwrite").parquet(s"$r/postings")
       doclens.write.mode("overwrite").parquet(s"$r/doclens")
       Serve.stamp(r)
-      s.catalog.clearCache() // build-side persists must not leak
     }
   }
 

@@ -1472,7 +1472,9 @@ ORDER BY p.cluster_id"""
 
   def prepareServe(s: SparkSession, dir: String): Unit = synchronized {
     val root = serveRoot(dir)
-    if (!Serve.complete(root, ArtifactDirs)) {
+    if (!Serve.complete(root, ArtifactDirs)) graft.Caches.scope(s) {
+      // the scope releases the build's caches; a clearCache here would
+      // also drop those of the enclosing query and of concurrent scopes
       buildIndex(s, dir, s"$root/ivf")
       // coarse router layer trained over the PERSISTED fine centroids
       // (≤ √C rows — one file), so the x99s serve row routes with zero
@@ -1486,7 +1488,6 @@ ORDER BY p.cluster_id"""
       PqQueries.buildIvfPq(s, s"$root/ivf", s"$root/pqres")
       buildCslsStats(s, s"$root/ivf", s"$root/csls_rm")
       Serve.stamp(root)
-      s.catalog.clearCache() // build-side persists must not leak
     }
   }
 
