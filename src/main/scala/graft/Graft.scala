@@ -60,41 +60,43 @@ object Graft {
     * ad-hoc SQL works against the same names immediately.
     *
     * Each step is an ordinary lazy plan until its own sink; nothing is
-    * collected except the small report render. Returns a manifest (one
-    * row per staged table: name, path, rows) — what the reference logs
-    * to stdout, as data.
+    * collected except the small report render. The run is one
+    * [[Caches.scope]], so every block its steps cache is released when
+    * it returns. Returns a manifest (one row per staged table: name,
+    * path, rows) — what the reference logs to stdout, as data.
     */
-  def runEtl(spark: SparkSession, dir: String, outDir: String): DataFrame = {
-    val staged = Seq(
-      "fact_loan"          -> loanDetail(spark, dir),
-      "dim_calendar"       -> calendar(spark, dir),
-      "analytics_accounting_report" -> reportingMonthly(spark, dir))
-    val counts = staged.map { case (name, df) =>
-      val path = s"$outDir/$name.parquet"
-      sources.Sinks.overwriteParquet(df, path)
-      val rows = Tables.parquet(spark, path).count()
-      (name, path, rows)
+  def runEtl(spark: SparkSession, dir: String, outDir: String): DataFrame =
+    Caches.scope(spark) {
+      val staged = Seq(
+        "fact_loan"          -> loanDetail(spark, dir),
+        "dim_calendar"       -> calendar(spark, dir),
+        "analytics_accounting_report" -> reportingMonthly(spark, dir))
+      val counts = staged.map { case (name, df) =>
+        val path = s"$outDir/$name.parquet"
+        sources.Sinks.overwriteParquet(df, path)
+        val rows = Tables.parquet(spark, path).count()
+        (name, path, rows)
+      }
+      sources.Sinks.syncWarehouse(spark,
+        staged.map { case (n, _) =>
+          n -> Tables.parquet(spark, s"$outDir/$n.parquet")
+        }.toMap)
+      // re-sort after the parquet roundtrip: the scan orders splits by
+      // size, not by the writer's sort, and a human-facing report must
+      // come out in (section, month) order
+      val report = Tables
+        .parquet(spark, s"$outDir/analytics_accounting_report.parquet")
+        .orderBy("section", "month")
+      writeXlsx(report, s"$outDir/accounting_report.xlsx")
+      writeSheetPayload(report, s"$outDir/accounting_report_sheet.json",
+        tab = "Accounting")
+      // the reference backs up the warehouse around every rebuild and
+      // prunes old copies (S14) — each nightly run publishes the report
+      // as a retained, immutable snapshot version
+      writeSnapshot(report, s"$outDir/report_snapshots", keep = 3)
+      import spark.implicits._
+      counts.toDF("table_name", "path", "n_rows").orderBy("table_name")
     }
-    sources.Sinks.syncWarehouse(spark,
-      staged.map { case (n, _) =>
-        n -> Tables.parquet(spark, s"$outDir/$n.parquet")
-      }.toMap)
-    // re-sort after the parquet roundtrip: the scan orders splits by
-    // size, not by the writer's sort, and a human-facing report must
-    // come out in (section, month) order
-    val report = Tables
-      .parquet(spark, s"$outDir/analytics_accounting_report.parquet")
-      .orderBy("section", "month")
-    writeXlsx(report, s"$outDir/accounting_report.xlsx")
-    writeSheetPayload(report, s"$outDir/accounting_report_sheet.json",
-      tab = "Accounting")
-    // the reference backs up the warehouse around every rebuild and
-    // prunes old copies (S14) — each nightly run publishes the report
-    // as a retained, immutable snapshot version
-    writeSnapshot(report, s"$outDir/report_snapshots", keep = 3)
-    import spark.implicits._
-    counts.toDF("table_name", "path", "n_rows").orderBy("table_name")
-  }
 
   /** The corpus-pipeline nightly composite — [[runEtl]]'s twin for the
     * LLM-training-data surface, wired through the SERVE tier end-to-end:
@@ -111,28 +113,29 @@ object Graft {
     * Staged outputs (each an oracle-verified declared row): the curated
     * training corpus, the keep-best canonical table (x42s), the
     * split-leakage audit (x43s), the LSH recall calibration (x47s),
-    * and the co-purchase pagerank (x46s). Returns the same
-    * (table_name, path, n_rows) manifest shape as [[runEtl]].
+    * and the co-purchase pagerank (x46s). Like [[runEtl]] it is one
+    * [[Caches.scope]] and returns a (table_name, path, n_rows) manifest.
     */
   def runCorpusEtl(spark: SparkSession, dir: String,
-      outDir: String): DataFrame = {
-    operators.AuditServe.prepare(spark, dir)
-    operators.SimilarityQueries.prepareServe(spark, dir)
-    operators.GraphServe.prepare(spark, dir)
-    val staged = Seq(
-      "corpus_curated"   -> run("corpus_curate", spark, dir),
-      "dedup_canonicals" -> run("x42s_canonical_serve", spark, dir),
-      "split_leakage"    -> run("x43s_leakage_serve", spark, dir),
-      "lsh_recall_audit" -> run("x47s_recall_serve", spark, dir),
-      "part_pagerank"    -> run("x46s_pagerank_serve", spark, dir))
-    val counts = staged.map { case (name, df) =>
-      val path = s"$outDir/$name.parquet"
-      sources.Sinks.overwriteParquet(df, path)
-      (name, path, Tables.parquet(spark, path).count())
+      outDir: String): DataFrame =
+    Caches.scope(spark) {
+      operators.AuditServe.prepare(spark, dir)
+      operators.SimilarityQueries.prepareServe(spark, dir)
+      operators.GraphServe.prepare(spark, dir)
+      val staged = Seq(
+        "corpus_curated"   -> run("corpus_curate", spark, dir),
+        "dedup_canonicals" -> run("x42s_canonical_serve", spark, dir),
+        "split_leakage"    -> run("x43s_leakage_serve", spark, dir),
+        "lsh_recall_audit" -> run("x47s_recall_serve", spark, dir),
+        "part_pagerank"    -> run("x46s_pagerank_serve", spark, dir))
+      val counts = staged.map { case (name, df) =>
+        val path = s"$outDir/$name.parquet"
+        sources.Sinks.overwriteParquet(df, path)
+        (name, path, Tables.parquet(spark, path).count())
+      }
+      import spark.implicits._
+      counts.toDF("table_name", "path", "n_rows").orderBy("table_name")
     }
-    import spark.implicits._
-    counts.toDF("table_name", "path", "n_rows").orderBy("table_name")
-  }
 
   /** Raw-ads ingestion transform (`extract_growth_data.py` analog),
     * applicable to any frame with the raw column shape.
@@ -143,8 +146,9 @@ object Graft {
   /** Deduplication suite over a `documents`-shaped table.
     *
     * Cache lifecycle: the LSH/Jaccard operators persist reused plan
-    * branches (signatures, posting lists). On a long-lived session, call
-    * [[clearCaches]] between batches to release them.
+    * branches (signatures, posting lists). On a long-lived session, run
+    * them through [[runScoped]], which releases exactly the query's own
+    * blocks once it is consumed.
     */
   object dedup {
     def exact(spark: SparkSession, dir: String): DataFrame =
@@ -298,8 +302,9 @@ object Graft {
       run("x90_srp_recall", spark, dir)
   }
 
-  /** Release persisted intermediate branches left by the dedup/similarity
-    * operators (Verify/Bench do this between queries internally).
+  /** Drop EVERY cached frame of the session, including those of scopes
+    * open on other threads. To release one query's blocks on a shared
+    * session use [[runScoped]] instead.
     */
   def clearCaches(spark: SparkSession): Unit = spark.catalog.clearCache()
 

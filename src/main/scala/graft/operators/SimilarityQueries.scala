@@ -1447,13 +1447,6 @@ ORDER BY p.cluster_id"""
   private[graft] def serveRoot(dir: String): String =
     Serve.root(dir, "embeddings.parquet", Serve.IndexBuilderVersion)
 
-  /** Build the serve artifacts (IVF index + semantic-dedup clusters)
-    * for `dir` once per data version — idempotent behind a _READY
-    * marker, synchronized within the JVM. The declared serve queries
-    * call this so they self-heal in any harness; [[graft.Bench]] calls
-    * it BEFORE its timed pass so the serve rows measure serving, not
-    * training (the build cost is already measured by x10/x41).
-    */
   /** Every DECLARED row that READS this family's serve root — the set
     * [[graft.Bench]] pre-builds from, kept NEXT TO the builder so a new
     * serve-reading row can't silently fall through to an in-row build
@@ -1470,6 +1463,13 @@ ORDER BY p.cluster_id"""
     Seq("ivf/centroids", "ivf/assignment", "coarse/centroids", "clusters",
       "pq/books", "pq/codes", "pqres/books", "pqres/codes", "csls_rm")
 
+  /** Build the serve artifacts (IVF index + semantic-dedup clusters)
+    * for `dir` once per data version — idempotent behind a _READY
+    * marker, synchronized within the JVM. The declared serve queries
+    * call this so they self-heal in any harness; [[graft.Bench]] calls
+    * it BEFORE its timed pass so the serve rows measure serving, not
+    * training (the build cost is already measured by x10/x41).
+    */
   def prepareServe(s: SparkSession, dir: String): Unit = synchronized {
     val root = serveRoot(dir)
     if (!Serve.complete(root, ArtifactDirs)) graft.Caches.scope(s) {

@@ -326,8 +326,7 @@ object EventStream {
     * @param keepNoDataBatches leave the trailing no-data micro-batch
     *   enabled — required when the query uses event-time TIMEOUTS, which
     *   only fire in the batch after the watermark advances
-    */
-  /** @param statePartitions shuffle/state-store partition count for the
+    * @param statePartitions shuffle/state-store partition count for the
     *   drain. Stateful operators open one state-store instance PER
     *   SHUFFLE PARTITION per micro-batch (a stream-stream join opens
     *   four) and each instance pays checkpoint-commit I/O — a fixed

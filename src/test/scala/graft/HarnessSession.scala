@@ -5,17 +5,15 @@ import org.apache.spark.sql.SparkSession
 /** The ONE definition of the measurement harness's session config, so
   * the measured-clean configuration (registry-sized codegen cache,
   * artifact isolation off; Bench.scala's scaladoc carries the r11
-  * forensics for both) cannot drift between the specs, the refit record
-  * and the probes that merge into it. Callers: `SparkSpec` (the specs'
-  * shared `local[4]` session), `Probe`, `ScaleExp`, `StreamScaleExp`,
-  * `IsoProbe`, `EtlBench`, `ScaleGen` and `SkewGen`.
+  * forensics for both) cannot drift between the specs and the probe.
+  * Callers: `SparkSpec` (the specs' shared `local[4]` session), `Probe`
+  * (one session per run, one per row in `scale` mode), `ScaleGen` and
+  * `SkewGen`.
   *
-  * Four builders keep their own session, each for a reason:
+  * Three builders keep their own session, each for a reason:
   *   - `Bench` and `Verify`: the driver contract, not edited; Bench's
   *     confs are also env-overridable for A/B forensics, which this
   *     deliberately is not.
-  *   - `LoadProf`: its static confs (codegen cache size, artifact
-  *     isolation) are the A/B variable it measures.
   *   - `CacheEvictionSpec`: its squeezed executor memory is the test.
   */
 object HarnessSession {

@@ -1,8 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
@@ -17,7 +19,8 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** The per-query dev probe: what one registry query costs, layer by
-  * layer, on one session. Three modes:
+  * layer, on one session — or, in `scale` mode, how that cost grows
+  * with the input. Four modes:
   *
   *   - `summary`: one dispatch-floor line (ms per empty one-task-per-slot
   *     job), then one line per (query, dir) — wall split into build (the
@@ -32,6 +35,17 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *   - `plan`: the `explain("formatted")` text under a `===== q =====`
   *     header (the format of the `plans/r*` before/after dumps), then a
   *     join/exchange node-count line.
+  *   - `scale`: writes the [[ScaleGen]] data at each size multiplier
+  *     under `genRoot/x<m>`, then measures each query in its own fresh
+  *     session (SCALE.md round 11: a shared session's old-gen pressure
+  *     confounds the 20× cells) — [[ScalePasses]] `summary` passes over
+  *     all sizes, each warmed at the smallest, keeping per size the
+  *     min-wall record, whose peak streaming state rows ride along. Each pass first waits for the
+  *     load sentinel ([[settledLoad]]); a pass whose sentinel still
+  *     reads over [[LoadOk]] is excluded and replaced, up to
+  *     [[LoadReplace]] times. Prints `[scale]` lines per size and per
+  *     query (the [[ScaleFit]] exponent), then the whole record as one
+  *     JSON object on the last line. Default rows: [[ScaleRows]].
   *
   * Each query is warmed once at the sf0.001 sibling of the first dir
   * (the dir itself when there is none) before its measured runs. Both
@@ -42,14 +56,18 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *
   * Usage: sbt "Test/runMain graft.Probe <summary|stages|plan>
   *   <sfDir[,sfDir…]> [query …]" (every registry query when none is
-  *   named; `local[$SPARK_GRAFT_CPUS]`, default 4).
+  *   named) or sbt "Test/runMain graft.Probe scale <genRoot>
+  *   <m1,m2[,m3…]> [query …]"; `local[$SPARK_GRAFT_CPUS]`, default 4.
+  *   Multiplier 20 and up wants a 24g heap (`SPARK_DRIVER_MEM=24g`).
   */
 object Probe {
 
   final case class Stage(id: Int, tasks: Int, wallMs: Long, runMs: Long,
       name: String)
 
-  final case class Batch(id: Long, rows: Long, durationMs: Seq[(String, Long)])
+  /** `stateRows`: rows held across the batch's state operators. */
+  final case class Batch(id: Long, rows: Long, stateRows: Long,
+      durationMs: Seq[(String, Long)])
 
   /** One measured run of `query` at `dir`; `error` set = nothing measured. */
   final case class Run(query: String, dir: String,
@@ -59,22 +77,85 @@ object Probe {
       stages: Seq[Stage] = Nil, tasks: Int = 0, taskS: Double = 0,
       residueS: Double = 0, batches: Seq[Batch] = Nil) {
 
-    def render(withStages: Boolean): String = error match {
-      case Some(e) => s"[probe] $query $dir FAILED: $e"
+    /** Peak streaming state over the run's micro-batches. */
+    def stateRows: Long = batches.map(_.stateRows).maxOption.getOrElse(0L)
+
+    def summary: String = error match {
+      case Some(e) => s"$query $dir FAILED: $e"
       case None =>
         val ph = phasesMs.map { case (k, v) => s"$k=${v}ms" }.mkString(" ")
-        val head = f"[probe] $query $dir wall=$wallS%.2f build=$buildS%.2f " +
+        f"$query $dir wall=$wallS%.2f build=$buildS%.2f " +
           f"plan=$planS%.2f exec=$execS%.2f $ph jobs=$jobs " +
           f"stages=${stages.size} tasks=$tasks taskS=$taskS%.2f " +
           f"resid=$residueS%.2f"
-        val bs = batches.map(b => s"  batch=${b.id} rows=${b.rows} " +
-          b.durationMs.map { case (k, v) => s"$k=${v}ms" }.mkString(" "))
-        val ss = if (!withStages) Nil else stages.map(s =>
-          f"  stage ${s.id}%4d tasks=${s.tasks}%3d wall=${s.wallMs}%5d ms " +
-            f"run=${s.runMs}%6d ms  ${s.name.take(70)}")
-        (head +: (bs ++ ss)).mkString("\n")
+    }
+
+    def render(withStages: Boolean): String = {
+      val bs = batches.map(b => s"  batch=${b.id} rows=${b.rows} " +
+        s"state=${b.stateRows} " +
+        b.durationMs.map { case (k, v) => s"$k=${v}ms" }.mkString(" "))
+      val ss = if (!withStages) Nil else stages.map(s =>
+        f"  stage ${s.id}%4d tasks=${s.tasks}%3d wall=${s.wallMs}%5d ms " +
+          f"run=${s.runMs}%6d ms  ${s.name.take(70)}")
+      (s"[probe] $summary" +: (bs ++ ss)).mkString("\n")
     }
   }
+
+  /** One `scale` row: per size multiplier (ascending), the min-wall run
+    * over the passes whose load sentinel held (over all passes when none
+    * did); `loads` holds every pass's sentinel, in run order.
+    */
+  final case class Scaled(query: String, mults: Seq[Int], cells: Seq[Run],
+      loads: Seq[Double]) {
+    private def ms = mults.map(_.toDouble)
+    private def ts = cells.map(_.wallS)
+    private def failed = cells.exists(_.error.isDefined)
+
+    def beta: Double = if (failed) Double.NaN else ScaleFit.beta(ms, ts)
+
+    /** (k, rmse, jackknife betas) of the least-squares fit: 4+ sizes. */
+    def fit: Option[(Double, Double, Seq[Double])] =
+      if (failed || mults.length < 4) None
+      else {
+        val (_, k, rmse) = ScaleFit.fitBeta(ms, ts)
+        Some((k, rmse, ScaleFit.betaSpread(ms, ts)))
+      }
+
+    def render: String = {
+      val fitted = fit.fold("") { case (k, rmse, jack) =>
+        f" k=$k%.4f rmse=$rmse%.3f jack=" +
+          (if (jack.isEmpty) "[noise floor]"
+           else f"[${jack.min}%.2f..${jack.max}%.2f]")
+      }
+      (cells.map(r => s"[scale] ${r.summary} state=${r.stateRows}") :+
+        (f"[scale] $query beta=$beta%.2f$fitted loads=" +
+          loads.map(l => f"$l%.1f").mkString("[", ",", "]") +
+          s" spiked=${loads.count(_ > LoadOk)}")).mkString("\n")
+    }
+  }
+
+  /** `scale`'s default rows: the heaviest batch rows, then the four
+    * streaming state shapes — window-bounded (st01), key-bounded (st06;
+    * st09 on RocksDB) and horizon-bounded (st07).
+    */
+  val ScaleRows: Seq[String] = Seq(
+    "x85_ivfpq_search", "x86_cluster_silhouette", "x96_hard_negatives",
+    "x46_part_pagerank", "x61_label_communities", "x99_ivf_coarse_route",
+    "x14_dedup_clusters", "x42_cluster_canonical",
+    "x73_source_attribution", "x65_bm25_rank", "x41_embed_dedup_clusters",
+    "x87_csls_rescore", "x88_ivf_append", "x71_triangle_cc",
+    "corpus_curate", "st01_stream_tumbling", "st06_stream_dedup",
+    "st09_transform_with_state", "st07_stream_stream_join")
+
+  val ScalePasses = 3
+  val LoadReplace = 2
+  val LoadWaitS = 150
+
+  /** The load-sentinel line: a 1-minute load average of one per 8 cores
+    * (4.0 on the 32-core host it was tuned on), at least 1.
+    */
+  val LoadOk: Double =
+    math.max(1.0, Runtime.getRuntime.availableProcessors / 8.0)
 
   /** `text` is the formatted plan, or the failure message. */
   final case class Plan(query: String, dir: String, text: String,
@@ -85,27 +166,53 @@ object Probe {
   }
 
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2 &&
-      Set("summary", "stages", "plan").contains(args(0)), "usage: " +
-      "graft.Probe <summary|stages|plan> <sfDir[,sfDir…]> [query …]")
-    val dirs = args(1).split(",").toSeq
+    val mode = args.headOption.getOrElse("")
+    val scale = mode == "scale"
+    require(Set("summary", "stages", "plan", "scale").contains(mode) &&
+      args.length >= (if (scale) 3 else 2), "usage: graft.Probe " +
+      "<summary|stages|plan> <sfDir[,sfDir…]> [query …] | " +
+      "scale <genRoot> <m1,m2[,m3…]> [query …]")
+    val named = args.drop(if (scale) 3 else 2).toSeq
     val names =
-      if (args.length > 2) args.drop(2).toSeq
+      if (named.nonEmpty) named
+      else if (scale) ScaleRows
       else SparkEntry.queries.keys.toSeq.sorted
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val spark =
-      HarnessSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
-    try args(0) match {
-      case "plan" => plans(spark, names, dirs).foreach(p => println(p.render))
-      case mode =>
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    def session[A](body: SparkSession => A): A = {
+      val spark = HarnessSession.build(cpus)
+      try body(spark) finally spark.stop()
+    }
+    if (scale) {
+      val mults = args(2).split(",").map(_.trim.toInt).toSeq.sorted
+      require(mults.length >= 2 && mults.distinct == mults &&
+        mults.forall(_ > 0), s"need 2+ distinct positive sizes: ${args(2)}")
+      if (mults.max >= 20 && HarnessSession.smallHeap)
+        println("[scale] WARNING: 20x+ cells on a heap < 20 GiB measure " +
+          "the harness's old-gen pressure, not the algorithm (SCALE.md " +
+          "r11) — launch with SPARK_DRIVER_MEM=24g")
+      val dirs = mults.map(m => m -> s"${args(1)}/x$m")
+      session(s => dirs.foreach { case (m, d) => ScaleGen.write(s, d, m) })
+      val rows = names.map { q =>
+        val row = session(scaleRow(_, q, dirs, () => settledLoad()))
+        println(row.render)
+        row
+      }
+      println(scaleJson(cpus, rows))
+    } else session { spark =>
+      val dirs = args(1).split(",").toSeq
+      if (mode == "plan")
+        plans(spark, names, dirs).foreach(p => println(p.render))
+      else {
         println(f"[dispatch] empty ${spark.sparkContext.defaultParallelism}" +
           f"-task job: ${dispatchMs(spark)}%.1f ms")
         val runs = measure(spark, names, dirs, warmDir(dirs.head))
         runs.foreach(r => println(r.render(mode == "stages")))
         println(s"[probe] ${runs.size} records, " +
           s"${runs.count(_.error.isDefined)} failed")
-    } finally spark.stop()
+      }
+    }
   }
 
   /** The sf0.001 sibling of `dir` (the test-data layout), else `dir`. */
@@ -169,7 +276,7 @@ object Probe {
           e: StreamingQueryListener.QueryProgressEvent): Unit = {
         val p = e.progress
         batches.add(Batch(p.batchId, p.numInputRows,
-          p.durationMs.asScala.toSeq.map { case (k, v) => k -> v.longValue }
+          p.stateOperators.map(_.numRowsTotal).sum, p.durationMs.asScala.toSeq.map { case (k, v) => k -> v.longValue }
             .sortBy(_._1)))
       }
     }
@@ -210,6 +317,78 @@ object Probe {
       sc.removeSparkListener(listener)
       spark.streams.removeListener(streamListener)
     }
+  }
+
+  /** `query` at each (multiplier, dir) of `dirs`: [[ScalePasses]]
+    * [[measure]] passes, warmed at the smallest size, each preceded by
+    * `settle()`, the pass's load sentinel. Passes reading over
+    * [[LoadOk]] are replaced, at most [[LoadReplace]] times.
+    */
+  def scaleRow(spark: SparkSession, query: String, dirs: Seq[(Int, String)],
+      settle: () => Double): Scaled = {
+    val sized = dirs.sortBy(_._1)
+    val passes = ArrayBuffer.empty[(Double, Seq[Run])]
+    def clean = passes.filter(_._1 <= LoadOk)
+    while (passes.size < ScalePasses || (clean.size < ScalePasses &&
+        passes.size < ScalePasses + LoadReplace)) {
+      val load = settle()
+      passes += load -> measure(spark, Seq(query), sized.map(_._2),
+        sized.head._2)
+    }
+    val kept = if (clean.nonEmpty) clean else passes
+    val cells = sized.indices.map { i =>
+      val runs = kept.map(_._2(i))
+      runs.filter(_.error.isEmpty).minByOption(_.wallS).getOrElse(runs.head)
+    }
+    Scaled(query, sized.map(_._1), cells, passes.map(_._1).toSeq)
+  }
+
+  /** The 1-minute load average once it reads at most [[LoadOk]], or
+    * after [[LoadWaitS]] seconds. The wait lets the tail of our own
+    * previous pass decay out of the average, so a reading still over
+    * the line is external contention. -1 (counted clean) when
+    * `/proc/loadavg` is unreadable.
+    */
+  def settledLoad(): Double = {
+    def load1 = Try(Files.readString(Paths.get("/proc/loadavg"))
+      .split(" ")(0).toDouble).getOrElse(-1.0)
+    val deadline = System.nanoTime() + LoadWaitS * 1000000000L
+    var l = load1
+    while (l > LoadOk && System.nanoTime() < deadline) {
+      Thread.sleep(5000)
+      l = load1
+    }
+    l
+  }
+
+  /** The whole `scale` record as one JSON object; NaN renders null. */
+  def scaleJson(cpus: Int, rows: Seq[Scaled]): String = {
+    import org.json4s._
+    import org.json4s.JsonDSL._
+    import org.json4s.jackson.JsonMethods.{compact, render}
+    def num(v: Double): JValue =
+      if (v.isFinite) JDouble(math.rint(v * 1000) / 1000) else JNull
+    def cell(r: Run): JObject =
+      ("dir" -> r.dir) ~ ("error" -> r.error) ~ ("wall_s" -> num(r.wallS)) ~
+        ("build_s" -> num(r.buildS)) ~ ("plan_s" -> num(r.planS)) ~
+        ("exec_s" -> num(r.execS)) ~ ("phases_ms" -> JObject(
+          r.phasesMs.map { case (k, v) => k -> JLong(v) }.toList)) ~
+        ("jobs" -> r.jobs) ~ ("tasks" -> r.tasks) ~
+        ("task_s" -> num(r.taskS)) ~ ("residue_s" -> num(r.residueS)) ~
+        ("batches" -> r.batches.size) ~ ("state_rows" -> r.stateRows) ~
+        ("stages" -> r.stages.map(s => ("id" -> s.id) ~
+          ("tasks" -> s.tasks) ~ ("wall_ms" -> s.wallMs) ~
+          ("run_ms" -> s.runMs) ~ ("name" -> s.name)))
+    def row(s: Scaled): JObject =
+      ("beta" -> num(s.beta)) ~
+        ("k" -> s.fit.map(f => num(f._1))) ~
+        ("rmse" -> s.fit.map(f => num(f._2))) ~
+        ("jack" -> s.fit.map(_._3.map(num))) ~
+        ("loads" -> s.loads.map(num)) ~
+        ("cells" -> JObject(s.mults.zip(s.cells).map { case (m, r) =>
+          s"x$m" -> (cell(r): JValue) }.toList))
+    compact(render(("cpus" -> cpus) ~ ("load_ok" -> num(LoadOk)) ~
+      ("rows" -> JObject(rows.map(s => s.query -> (row(s): JValue)).toList))))
   }
 
   /** The formatted plan and node counts per (query, dir); runs no action

@@ -1,8 +1,10 @@
 package graft
 
 /** [[Probe]] is the one per-query dev tool: pin that its records stay
-  * filled for a batch row and a streaming row, and that plan mode keeps
-  * the `explain("formatted")` layout and a parseable node-count line.
+  * filled for a batch row and a streaming row, that plan mode keeps the
+  * `explain("formatted")` layout and a parseable node-count line, and
+  * that scale mode keeps a filled record per size, the streaming state
+  * and a finite exponent, and replaces spiked passes within its budget.
   */
 class ProbeSpec extends SparkSpec {
 
@@ -40,5 +42,45 @@ class ProbeSpec extends SparkSpec {
       case other => fail(s"unparseable node-count line: $other")
     }
     assert(p.render.startsWith(s"\n===== j01_inner_join =====\n${p.text}\n"))
+  }
+
+  test("scale: a filled record per size, growing st06 state, finite beta") {
+    val sf01 = new java.io.File(new java.io.File(sf).getParentFile, "sf0.01")
+      .getPath
+    val rows = Seq("st06_stream_dedup", "x46_part_pagerank").map(q =>
+      Probe.scaleRow(spark, q, Seq(10 -> sf01, 1 -> sf), () => 0.0))
+    rows.foreach { s =>
+      assert(s.mults == Seq(1, 10) && s.cells.map(_.dir) == Seq(sf, sf01))
+      assert(s.loads == Seq.fill(Probe.ScalePasses)(0.0), s.loads)
+      s.cells.foreach { r =>
+        assert(r.error.isEmpty && r.wallS > 0 && r.jobs > 0 &&
+          r.tasks >= r.jobs && r.stages.nonEmpty, s.render)
+      }
+      assert(s.beta.isFinite, s.render)
+    }
+    val Seq(st06, x46) = rows
+    val state = st06.cells.map(_.stateRows)
+    assert(state(0) > 0 && state(1) > state(0), state)
+    assert(x46.cells.forall(_.stateRows == 0), x46.render)
+    import org.json4s._
+    val json = org.json4s.jackson.JsonMethods.parse(Probe.scaleJson(4, rows))
+    assert((json \ "rows" \ "st06_stream_dedup" \ "cells" \ "x10" \
+      "state_rows") == JInt(state(1)))
+    assert((json \ "rows" \ "x46_part_pagerank" \ "cells" \ "x1" \
+      "stages").children.nonEmpty)
+  }
+
+  test("scale: a spiked pass is replaced, at most LoadReplace times") {
+    def row(settle: () => Double) =
+      Probe.scaleRow(spark, "j01_inner_join", Seq(1 -> sf, 2 -> sf), settle)
+    val spike = Probe.LoadOk + 1
+    val loads = Iterator(spike, 0.0, 0.0, 0.0)
+    val once = row(() => loads.next())
+    assert(once.loads == Seq(spike, 0.0, 0.0, 0.0))
+    assert(once.render.endsWith("spiked=1"), once.render)
+    val always = row(() => spike)
+    assert(always.loads ==
+      Seq.fill(Probe.ScalePasses + Probe.LoadReplace)(spike))
+    assert(always.cells.forall(_.error.isEmpty), always.render)
   }
 }

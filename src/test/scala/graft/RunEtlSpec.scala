@@ -5,7 +5,8 @@ import java.nio.file.Files
 /** End-to-end pin for Graft.runEtl: the nightly-run analog must stage all
   * three tables, build the warehouse (with stale-table GC), render both
   * report artifacts, and be idempotent on rerun — the reference's daily
-  * full-rebuild contract.
+  * full-rebuild contract. Both composites, run bare, leave no cached
+  * block behind on the shared session.
   */
 class RunEtlSpec extends SparkSpec {
 
@@ -82,5 +83,19 @@ class RunEtlSpec extends SparkSpec {
     assert(again.map(r => (r.getString(0), r.getLong(2))).toSeq ==
       manifest.map(r => (r.getString(0), r.getLong(2))).toSeq)
     spark.catalog.clearCache()
+  }
+
+  test("both nightly composites release every block they cache") {
+    // a frame an earlier run left cached would turn the composites'
+    // persists of the same plans into no-ops and hide a leak
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    Graft.runEtl(spark, sf, Files.createTempDirectory("etl").toString)
+      .collect()
+    Graft.runCorpusEtl(spark, sf, Files.createTempDirectory("cetl").toString)
+      .collect()
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(left.isEmpty, left.values.map(_.toDebugString).mkString("\n"))
   }
 }
