@@ -47,9 +47,18 @@ object Caches {
   def scoped[T](ds: Dataset[T]): Dataset[T] =
     scopedAs(ds, StorageLevel.MEMORY_AND_DISK)
 
+  /** Persists and registers only when no equal plan is cached yet: the
+    * scope that cached the plan first owns its release, so a nested or
+    * concurrent scope reading the same plan cannot drop it on close
+    * (`unpersist` matches by plan). The lookup and the persist are not
+    * atomic: two threads persisting an equal plan at once can both
+    * register it, and the first to close drops it for the other.
+    */
   def scopedAs[T](ds: Dataset[T], level: StorageLevel): Dataset[T] = {
-    ds.persist(level)
-    register(() => ds.unpersist(blocking = false))
+    if (ds.storageLevel == StorageLevel.NONE) {
+      ds.persist(level)
+      register(() => ds.unpersist(blocking = false))
+    }
     ds
   }
 

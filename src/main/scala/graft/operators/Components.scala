@@ -84,6 +84,30 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   */
 object Components {
 
+  /** The DuckDB oracle's connected components: rounds 1..`rounds` of
+    * min-label propagation plus pointer jumping over `sym(src, dst)`,
+    * starting from a caller-defined `${jump}0(id, label)`. Round i's
+    * `$prop$i` takes each vertex's least neighbor label, and `$jump$i`
+    * replaces each label with that label's own label. Every round CTE
+    * is MATERIALIZED: each is read twice, and an inlining engine would
+    * double the plan per round. The one spelling behind the x14/x42,
+    * x41/x64 and mm05 oracles.
+    */
+  def duckCcRoundCtes(rounds: Int, id: String, prop: String,
+      jump: String): String =
+    (1 to rounds).map { i =>
+      s"""$prop$i AS MATERIALIZED (
+  SELECT v.$id, least(v.label, coalesce(m.nl, v.label)) AS label
+  FROM $jump${i - 1} v LEFT JOIN (
+    SELECT s.src, min(l.label) AS nl
+    FROM sym s JOIN $jump${i - 1} l ON s.dst = l.$id GROUP BY s.src) m
+  ON v.$id = m.src
+),
+$jump$i AS MATERIALIZED (
+  SELECT p.$id, q.label FROM $prop$i p JOIN $prop$i q ON p.label = q.$id
+)"""
+    }.mkString(",\n")
+
   /** @param edges     undirected edge list (each pair listed once is
     *                  fine; duplicates and either orientation are
     *                  tolerated). PRECONDITION: endpoints are drawn from

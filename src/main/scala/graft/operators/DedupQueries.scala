@@ -597,12 +597,6 @@ cand AS (
     */
   private val CcRounds = 12
 
-  /** x14's full oracle CTE chain — LSH candidates, symmetrized edges,
-    * and the fixed CcRounds unroll of propagate+shortcut (each round CTE
-    * MATERIALIZED: every one is referenced twice, and an inlining engine
-    * would otherwise double the plan per round, 2^CcRounds LSH copies).
-    * Shared with x42 so the cluster spelling cannot drift.
-    */
   /** The x14 oracle text, shared verbatim with its serve twin. */
   private lazy val x14Oracle: String = s"""
 WITH $duckClusterChain
@@ -610,19 +604,13 @@ SELECT doc_id, label AS cluster_id,
   count(*) OVER (PARTITION BY label) AS cluster_size
 FROM s$CcRounds ORDER BY doc_id"""
 
+  /** x14's full oracle CTE chain — LSH candidates, symmetrized edges,
+    * and the fixed CcRounds unroll of propagate+shortcut
+    * ([[Components.duckCcRoundCtes]]). Shared with x42 so the cluster
+    * spelling cannot drift.
+    */
   private def duckClusterChain: String = {
-    val rounds = (1 to CcRounds).map { i =>
-      s"""p$i AS MATERIALIZED (
-  SELECT v.doc_id, least(v.label, coalesce(m.nl, v.label)) AS label
-  FROM s${i - 1} v LEFT JOIN (
-    SELECT s.src, min(l.label) AS nl
-    FROM sym s JOIN s${i - 1} l ON s.dst = l.doc_id GROUP BY s.src) m
-  ON v.doc_id = m.src
-),
-s$i AS MATERIALIZED (
-  SELECT p.doc_id, q.label FROM p$i p JOIN p$i q ON p.label = q.doc_id
-)"""
-    }.mkString(",\n")
+    val rounds = Components.duckCcRoundCtes(CcRounds, "doc_id", "p", "s")
     s"""$duckLshCandCtes,
 sym AS MATERIALIZED (
   SELECT doc_a AS src, doc_b AS dst FROM cand

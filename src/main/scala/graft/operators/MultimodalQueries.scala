@@ -19,23 +19,6 @@ object MultimodalQueries {
     (for { k <- 0 until 8; n <- 0 until 32 }
       yield s"($k,$n,${Multimodal.PhashCos(k)(n)})").mkString(", ")
 
-  /** The x14 oracle's min-label + pointer-jumping unroll over the
-    * mm05 pair graph (`sym`/`s0` defined by the caller).
-    */
-  private def phashCcRoundCtes: String =
-    (1 to Multimodal.PhashCcRounds).map { i =>
-      s"""p$i AS MATERIALIZED (
-  SELECT v.doc_id, least(v.label, coalesce(m.nl, v.label)) AS label
-  FROM s${i - 1} v LEFT JOIN (
-    SELECT s.src, min(l.label) AS nl
-    FROM sym s JOIN s${i - 1} l ON s.dst = l.doc_id GROUP BY s.src) m
-  ON v.doc_id = m.src
-),
-s$i AS MATERIALIZED (
-  SELECT p.doc_id, q.label FROM p$i p JOIN p$i q ON p.label = q.doc_id
-)"""
-    }.mkString(",\n")
-
   /** The [[Multimodal.grayPlane]] pixel-content rule as oracle CTEs —
     * the GENERATOR's plane, one (doc_id, p, pv) cell per pixel. The
     * engine side recovers the same plane by genuinely parsing the mixed
@@ -194,7 +177,7 @@ sym AS MATERIALIZED (
   UNION ALL SELECT doc_b, doc_a FROM cand
 ),
 s0 AS (SELECT doc_id, doc_id AS label FROM documents),
-$phashCcRoundCtes
+${Components.duckCcRoundCtes(Multimodal.PhashCcRounds, "doc_id", "p", "s")}
 SELECT doc_id, label AS cluster_id,
   count(*) OVER (PARTITION BY label) AS cluster_size
 FROM s${Multimodal.PhashCcRounds} ORDER BY doc_id"""),

@@ -503,18 +503,8 @@ assigned AS (
     * owns s1..sN for its per-iteration sums.
     */
   private def duckEmbClusterCtes: String = {
-    val rounds = (1 to EmbCcRounds).map { i =>
-      s"""pr$i AS MATERIALIZED (
-  SELECT v.vec_id, least(v.label, coalesce(m.nl, v.label)) AS label
-  FROM lv${i - 1} v LEFT JOIN (
-    SELECT s.src, min(l.label) AS nl
-    FROM sym s JOIN lv${i - 1} l ON s.dst = l.vec_id GROUP BY s.src) m
-  ON v.vec_id = m.src
-),
-lv$i AS MATERIALIZED (
-  SELECT p.vec_id, q.label FROM pr$i p JOIN pr$i q ON p.label = q.vec_id
-)"""
-    }.mkString(",\n")
+    val rounds =
+      Components.duckCcRoundCtes(EmbCcRounds, "vec_id", "pr", "lv")
     s"""$duckQuantizedCte,
 $duckKmeansCtes,
 $duckAssignedCtes,

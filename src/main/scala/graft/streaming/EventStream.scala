@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode, TimeMode, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface over the `events` table.
@@ -178,7 +179,8 @@ object EventStream {
     * state (event_type → count) plus a ValueState total, each
     * independently evolvable/TTL-able — composite state the old API
     * could only fake inside one opaque case-class blob. Requires the
-    * RocksDB state-store provider ([[runToMemory]] arranges it).
+    * RocksDB state-store provider, which [[runToMemory]] derives from
+    * the plan's `transformWithState` node.
     */
   final case class TypeProfile(user_id: Long, n_types: Long,
       n_events: Long)
@@ -319,13 +321,31 @@ object EventStream {
       }
   }
 
-  /** Drain a streaming aggregate synchronously into an in-memory table and
+  /** Drain a streaming query synchronously into an in-memory table and
     * return it as a DataFrame (Trigger.AvailableNow semantics via
     * processAllAvailable — the whole backlog, then stop).
     *
-    * @param keepNoDataBatches leave the trailing no-data micro-batch
-    *   enabled — required when the query uses event-time TIMEOUTS, which
-    *   only fire in the batch after the watermark advances
+    * Everything else the drain needs is read from `agg`'s analyzed plan
+    * (analysis only, no job):
+    *
+    *   - output mode: a `flatMapGroupsWithState`/`transformWithState`
+    *     node's own mode (Spark rejects any other); else complete for a
+    *     streaming aggregation (an aggregate on a static join side does
+    *     not count) and append for the rest;
+    *   - state store: RocksDB exactly when the plan has a
+    *     `transformWithState` node (Spark refuses that operator on the
+    *     HDFS-backed default), the default otherwise;
+    *   - no-data micro-batches: kept only for event-time timeouts or
+    *     timers, which fire in the batch after the watermark advances;
+    *     a drain-and-stop query never needs them otherwise.
+    *
+    * The state-store, no-data-batch and shuffle-partition confs are set
+    * on `spark` only across `start()`: the query clones the session when
+    * it is built and reads them from that clone, so a batch query
+    * planned on `spark` while the drain runs sees the session's own
+    * values (StreamConfWindowSpec). The memory sink's name is generated
+    * and its view dropped on return.
+    *
     * @param statePartitions shuffle/state-store partition count for the
     *   drain. Stateful operators open one state-store instance PER
     *   SHUFFLE PARTITION per micro-batch (a stream-stream join opens
@@ -346,59 +366,48 @@ object EventStream {
     *   this to its key cardinality the same way.
     */
   def runToMemory(spark: SparkSession, agg: DataFrame,
-      name: String, outputMode: String = "complete",
-      keepNoDataBatches: Boolean = false,
-      rocksdb: Boolean = false,
       statePartitions: Int = 8): DataFrame = {
-    // transformWithState requires the RocksDB state-store provider;
-    // scoped to the drain (set before start, restored after) so the
-    // HDFS-backed default keeps serving the other streaming queries
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val provPrev = spark.conf.getOption(provKey)
-    if (rocksdb) spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state" +
-        ".RocksDBStateStoreProvider")
-    // drain-and-stop queries never need the trailing no-data micro-batch
-    // (it exists to advance watermarks for long-running queries); restored
-    // after the drain so long-running queries on this session keep it
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val ndPrev = spark.conf.getOption(ndKey)
-    spark.conf.set(ndKey, keepNoDataBatches.toString)
-    // See the statePartitions scaladoc: state-store instances and their
-    // commit I/O scale with the shuffle partition count, so the drain
-    // runs at the caller's key-cardinality-sized value (default 8, down
-    // from the session's 32 — with 32 the fixed cost dwarfs the data).
-    // Restored after the drain.
-    val spKey = "spark.sql.shuffle.partitions"
-    val spPrev = spark.conf.getOption(spKey)
-    spark.conf.set(spKey, statePartitions.toString)
-    val q = agg.writeStream
-      .outputMode(outputMode)
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    try {
-      q.processAllAvailable()
-    } finally {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate,
+      FlatMapGroupsWithState, TransformWithState}
+    val plan = agg.queryExecution.analyzed
+    val outputMode = plan.collectFirst {
+      case f: FlatMapGroupsWithState => f.outputMode
+      case t: TransformWithState     => t.outputMode
+    }.getOrElse(
+      if (plan.exists { case a: Aggregate => a.isStreaming; case _ => false })
+        OutputMode.Complete
+      else OutputMode.Append)
+    val rocksdb = plan.exists(_.isInstanceOf[TransformWithState])
+    val eventTime = plan.exists {
+      case f: FlatMapGroupsWithState =>
+        f.timeout == GroupStateTimeout.EventTimeTimeout
+      case t: TransformWithState => t.timeMode == TimeMode.EventTime()
+      case _                     => false
+    }
+    val confs = Seq(
+      "spark.sql.shuffle.partitions" -> statePartitions.toString,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> eventTime.toString
+    ) ++ Option.when(rocksdb)("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val name = "drain_" + java.util.UUID.randomUUID.toString.replace("-", "")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val q =
       try {
-        q.stop()
-        q.awaitTermination()
-      } finally {
-        // restore even when stop/awaitTermination rethrow a query failure
-        ndPrev match {
-          case Some(v) => spark.conf.set(ndKey, v)
-          case None    => spark.conf.unset(ndKey)
-        }
-        spPrev match {
-          case Some(v) => spark.conf.set(spKey, v)
-          case None    => spark.conf.unset(spKey)
-        }
-        if (rocksdb) provPrev match {
-          case Some(v) => spark.conf.set(provKey, v)
-          case None    => spark.conf.unset(provKey)
-        }
+        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+        agg.writeStream
+          .outputMode(outputMode)
+          .format("memory")
+          .queryName(name)
+          .trigger(Trigger.ProcessingTime(0))
+          .start()
+      } finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
       }
+    try q.processAllAvailable()
+    finally {
+      q.stop()
+      q.awaitTermination()
     }
     // localize the result and DROP the memory sink's temp view: each
     // drain otherwise leaves its full result set registered in the

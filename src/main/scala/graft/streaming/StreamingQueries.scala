@@ -17,8 +17,7 @@ object StreamingQueries {
     "st01_stream_tumbling" -> QueryDef(
       (s, d) => {
         val agg = EventStream.tumblingCounts(EventStream.readEvents(s, d))
-        EventStream.runToMemory(s, agg, s"st01_sink_${System.nanoTime}",
-            statePartitions = 2)
+        EventStream.runToMemory(s, agg, statePartitions = 2)
           .select(
             col("window.start").cast("timestamp_ntz").as("window_start"),
             col("window.end").cast("timestamp_ntz").as("window_end"),
@@ -44,7 +43,7 @@ object StreamingQueries {
     "st02_stream_sessions" -> QueryDef(
       (s, d) => {
         val agg = EventStream.sessionCounts(EventStream.readEvents(s, d))
-        EventStream.runToMemory(s, agg, s"st02_sink_${System.nanoTime}")
+        EventStream.runToMemory(s, agg)
           .select(
             col("session_window.start").cast("timestamp_ntz")
               .as("session_start"),
@@ -89,8 +88,7 @@ ORDER BY user_id, session_start"""),
         val agg = EventStream
           .statefulUserTotals(EventStream.readEvents(s, d)).toDF()
         val w = Window.partitionBy("user_id").orderBy(desc("n_events"))
-        EventStream.runToMemory(s, agg, s"st03_sink_${System.nanoTime}",
-            outputMode = "update", statePartitions = 2)
+        EventStream.runToMemory(s, agg, statePartitions = 2)
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1).drop("rn")
           .orderBy("user_id")
@@ -114,9 +112,7 @@ ORDER BY user_id, session_start"""),
           .groupBy(col("c_mktsegment"))
           .agg(count(lit(1)).as("n_events"),
             graft.functions.Money.moneySum(col("value")).as("total_value"))
-        EventStream.runToMemory(s, enriched,
-            s"st04_sink_${System.nanoTime}",
-            statePartitions = 2)
+        EventStream.runToMemory(s, enriched, statePartitions = 2)
           .orderBy("c_mktsegment")
       },
       Some(s"""SELECT c_mktsegment, count(*) AS n_events,
@@ -132,8 +128,7 @@ ORDER BY user_id, session_start"""),
       (s, d) => {
         val dedup = EventStream.dedupKeys(EventStream.readEvents(s, d),
           Seq("user_id", "event_type"))
-        EventStream.runToMemory(s, dedup, s"st06_sink_${System.nanoTime}",
-            outputMode = "append", statePartitions = 2)
+        EventStream.runToMemory(s, dedup, statePartitions = 2)
           .orderBy("user_id", "event_type")
       },
       Some("""SELECT DISTINCT user_id, event_type FROM events
@@ -148,8 +143,7 @@ ORDER BY user_id, session_start"""),
     "st08_stream_hopping" -> QueryDef(
       (s, d) => {
         val agg = EventStream.hoppingCounts(EventStream.readEvents(s, d))
-        EventStream.runToMemory(s, agg, s"st08_sink_${System.nanoTime}",
-            statePartitions = 2)
+        EventStream.runToMemory(s, agg, statePartitions = 2)
           .select(
             col("window.start").cast("timestamp_ntz").as("window_start"),
             col("window.end").cast("timestamp_ntz").as("window_end"),
@@ -171,8 +165,7 @@ ORDER BY user_id, session_start"""),
         val agg = EventStream
           .typeProfiles(EventStream.readEvents(s, d)).toDF()
         val w = Window.partitionBy("user_id").orderBy(desc("n_events"))
-        EventStream.runToMemory(s, agg, s"st09_sink_${System.nanoTime}",
-            outputMode = "update", rocksdb = true)
+        EventStream.runToMemory(s, agg)
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1).drop("rn")
           .orderBy("user_id")
@@ -204,8 +197,7 @@ ORDER BY user_id, session_start"""),
           col("user_id") === col("p_user") &&
             col("purchase_ts") >= col("click_ts") &&
             col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"))
-        EventStream.runToMemory(s, joined,
-            s"st07_sink_${System.nanoTime}", outputMode = "append", statePartitions = 2)
+        EventStream.runToMemory(s, joined, statePartitions = 2)
           .select(col("click_id"), col("purchase_id"), col("user_id"),
             col("click_ts").cast("timestamp_ntz").as("click_ts"),
             col("purchase_ts").cast("timestamp_ntz").as("purchase_ts"))
@@ -236,9 +228,7 @@ ORDER BY user_id, session_start"""),
         val wmUs = 3600L * 1000000L
         val sessions = EventStream
           .timeoutSessions(EventStream.readEvents(s, d)).toDF()
-        val emitted = EventStream.runToMemory(s, sessions,
-          s"st05_sink_${System.nanoTime}", outputMode = "append",
-          keepNoDataBatches = true)
+        val emitted = EventStream.runToMemory(s, sessions)
         // closed-region bound from the same events table (one scalar agg,
         // broadcast — no driver round-trip, the plan stays lazy)
         val bound = graft.Tables.events(s, d)
@@ -310,8 +300,7 @@ ORDER BY user_id, session_start"""),
           .groupBy(col("band"), col("sigval"))
           .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("rep_id"))
           .filter(col("n_docs") >= 2)
-        EventStream.runToMemory(s, buckets,
-            s"st10_sink_${System.nanoTime}")
+        EventStream.runToMemory(s, buckets)
           .orderBy("band", "sigval")
       },
       Some(s"""
@@ -335,9 +324,7 @@ ORDER BY band, sigval"""),
       (s, d) => {
         import graft.operators.PipelineQueries.{minkAgg, minkQuantiles, minkStaged}
         val agg = minkAgg(minkStaged(EventStream.readDocuments(s, d)))
-        minkQuantiles(
-          EventStream.runToMemory(s, agg, s"st11_sink_${System.nanoTime}",
-            statePartitions = 2))
+        minkQuantiles(EventStream.runToMemory(s, agg, statePartitions = 2))
           .orderBy("source", "q")
       },
       Some(s"""
@@ -371,8 +358,7 @@ SELECT source, q, est FROM est ORDER BY source, q"""),
             sum(col("n_tokens")).cast("bigint").as("tokens_in"),
             sum(when(kept, col("n_tokens")).otherwise(0L)).cast("bigint")
               .as("tokens_kept"))
-        EventStream.runToMemory(s, gate, s"st12_sink_${System.nanoTime}",
-            statePartitions = 2)
+        EventStream.runToMemory(s, gate, statePartitions = 2)
           .orderBy("source")
       },
       Some(s"""
@@ -409,8 +395,7 @@ FROM flags GROUP BY source ORDER BY source"""),
           .groupBy(col("source"))
           .agg(count(lit(1)).as("docs_in"),
             expr(s"kmv_sketch(h, $StKmvK)").as("uniq_est"))
-        EventStream.runToMemory(s, hashed, s"st13_sink_${System.nanoTime}",
-            statePartitions = 2)
+        EventStream.runToMemory(s, hashed, statePartitions = 2)
           .orderBy("source")
       },
       Some(s"""
@@ -464,9 +449,7 @@ ORDER BY source"""),
           .select(posexplode(col("xq")).as(Seq("pos", "xf")), col("dt"))
           .groupBy((col("pos") + 1).cast("bigint").as("dim"))
           .agg(sum(col("xf") * col("dt")).as("w"))
-        val drained = EventStream.runToMemory(s, acc,
-          s"st14_sink_${System.nanoTime}",
-            statePartitions = 2)
+        val drained = EventStream.runToMemory(s, acc, statePartitions = 2)
         val wr = drained.select(col("dim"),
           expr(tdiv("w", PcaScale.toString, "div")).as("wr"))
         val nrm = wr.agg(expr(isqrt(
@@ -534,8 +517,7 @@ ORDER BY dim"""
           .agg(count(lit(1)).as("n_docs"),
             sum(col("ws")).as("ws_tokens"),
             sum(col("re")).as("re_tokens"))
-        EventStream.runToMemory(s, agg, s"st15_sink_${System.nanoTime}",
-            statePartitions = 2)
+        EventStream.runToMemory(s, agg, statePartitions = 2)
           .withColumn("fertility",
             col("re_tokens").cast("double") /
               col("ws_tokens").cast("double"))
@@ -583,8 +565,7 @@ FROM t GROUP BY lang ORDER BY lang"""),
           .withColumn("qe", expr(SimilarityQueries.sparkQuant))
         val agg = PqQueries.codebookStatsOf(
           PqQueries.encodedPacked(stream, books))
-        EventStream.runToMemory(s, agg, s"st16_sink_${System.nanoTime}",
-            statePartitions = 2)
+        EventStream.runToMemory(s, agg, statePartitions = 2)
           .orderBy("sub", "code")
       },
       Some(graft.operators.PqQueries.codebookStatsSql),
@@ -616,8 +597,7 @@ FROM t GROUP BY lang ORDER BY lang"""),
           .withColumn("qe", expr(SimilarityQueries.sparkQuant))
           .withColumn("qn", expr(SimilarityQueries.sparkNorm))
         val agg = SimilarityQueries.frozenAssignStats(stream, cent)
-        EventStream.runToMemory(s, agg, s"st17_sink_${System.nanoTime}",
-            statePartitions = 2)
+        EventStream.runToMemory(s, agg, statePartitions = 2)
           .orderBy("bucket")
       },
       Some(graft.operators.SimilarityQueries.frozenAssignStatsSql),
@@ -641,8 +621,7 @@ FROM t GROUP BY lang ORDER BY lang"""),
           .withColumn("qe", expr(SimilarityQueries.sparkQuant))
           .withColumn("qn", expr(SimilarityQueries.sparkNorm))
         val agg = SrpQueries.bucketStats(stream)
-        EventStream.runToMemory(s, agg, s"st18_sink_${System.nanoTime}",
-            statePartitions = 2)
+        EventStream.runToMemory(s, agg, statePartitions = 2)
           .orderBy("band", "bkey")
       },
       Some(graft.operators.SrpQueries.bucketStatsSql),
@@ -667,8 +646,7 @@ FROM t GROUP BY lang ORDER BY lang"""),
             explode(split(col("text"), " ")).as("word"))
           .filter(length(col("word")) > 0)
           .groupBy("source", "word").agg(count(lit(1)).as("w_cnt"))
-        val occ = EventStream.runToMemory(s, agg,
-          s"st19_sink_${System.nanoTime}")
+        val occ = EventStream.runToMemory(s, agg)
         BpeQueries.fertilityOf(occ,
           BpeQueries.encodeTypes(occ.select("word").distinct(),
             BpeQueries.servedMerges(s, d)))
@@ -694,8 +672,7 @@ FROM t GROUP BY lang ORDER BY lang"""),
             explode(split(col("text"), " ")).as("word"))
           .filter(length(col("word")) > 0)
           .groupBy("source", "word").agg(count(lit(1)).as("w_cnt"))
-        val occ = EventStream.runToMemory(s, agg,
-          s"st21_sink_${System.nanoTime}")
+        val occ = EventStream.runToMemory(s, agg)
         BpeQueries.fertilityOf(occ,
           UnigramQueries.segmentTypes(occ.select("word").distinct(),
             UnigramQueries.servedPieces(s, d)))
@@ -725,8 +702,7 @@ FROM t GROUP BY lang ORDER BY lang"""),
             explode(expr(s"sequence(0, ${PipelineQueries.CmsD - 1})")))
           .withColumn("b", expr(PipelineQueries.cmsBucketExpr("r")))
           .groupBy("r", "b").agg(count(lit(1)).as("counter"))
-        EventStream.runToMemory(s, agg, s"st20_sink_${System.nanoTime}",
-            statePartitions = 2)
+        EventStream.runToMemory(s, agg, statePartitions = 2)
           .select(col("r").cast("bigint").as("r"), col("b"),
             col("counter").cast("bigint").as("counter"))
           .orderBy("r", "b")

@@ -130,6 +130,29 @@ class CacheScopeSpec extends SparkSpec {
       s"the outer close left ${leaked.size} RDDs: " + describe(leaked))
   }
 
+  test("a nested scope caching an equal plan keeps the outer scope's " +
+      "cache") {
+    import org.apache.spark.storage.StorageLevel
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def plan = spark.range(0, 1000).selectExpr("id * 7 AS v")
+    val df = plan
+    val heldInside = Caches.scope(spark) {
+      df.transform(Caches.scoped).count()
+      // an equal plan: persist would be a no-op, so the inner scope must
+      // not take over (and drop) the outer scope's entry
+      Caches.scope(spark)(plan.transform(Caches.scoped).count())
+      df.storageLevel
+    }
+    assert(heldInside != StorageLevel.NONE,
+      "the inner scope's close dropped the outer scope's cache")
+    assert(df.storageLevel == StorageLevel.NONE,
+      "the outer scope's close kept its cache")
+    val leaked = newRdds(before)
+    assert(leaked.isEmpty,
+      s"the outer close left ${leaked.size} RDDs: " + describe(leaked))
+  }
+
   test("only Caches persists or checkpoints in src/main") {
     // every other site must go through Caches.scoped / checkpointed so
     // its scope releases it; the one exception releases itself

@@ -38,10 +38,11 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *   - `scale`: writes the [[ScaleGen]] data at each size multiplier
   *     under `genRoot/x<m>`, then measures each query in its own fresh
   *     session (SCALE.md round 11: a shared session's old-gen pressure
-  *     confounds the 20× cells) — [[ScalePasses]] `summary` passes over
-  *     all sizes, each warmed at the smallest, keeping per size the
-  *     min-wall record, whose peak streaming state rows ride along. Each pass first waits for the
-  *     load sentinel ([[settledLoad]]); a pass whose sentinel still
+  *     confounds the 20× cells) — one warm-up at the smallest size,
+  *     then [[ScalePasses]] `summary` passes over all sizes, keeping per
+  *     size the min-wall record, whose peak streaming state rows ride
+  *     along. Each pass first waits for the load sentinel
+  *     ([[settledLoad]]); a pass whose sentinel still
   *     reads over [[LoadOk]] is excluded and replaced, up to
   *     [[LoadReplace]] times. Prints `[scale]` lines per size and per
   *     query (the [[ScaleFit]] exponent), then the whole record as one
@@ -244,7 +245,19 @@ object Probe {
 
   /** One warm-up per query at `warm`, then one measured run per dir. */
   def measure(spark: SparkSession, names: Seq[String], dirs: Seq[String],
-      warm: String): Seq[Run] = {
+      warm: String): Seq[Run] =
+    measureWarmed(spark, names, dirs, warmUp(spark, _, warm))
+
+  /** `query` built and counted once at `dir`, in a scope. */
+  private def warmUp(spark: SparkSession, query: String,
+      dir: String): Try[Long] =
+    Try(scoped(spark)(SparkEntry.queries(query)(spark, dir).count()))
+
+  /** One measured run per query and dir, each query after `warmed(q)`;
+    * a failed warm-up fails the query's records.
+    */
+  private def measureWarmed(spark: SparkSession, names: Seq[String],
+      dirs: Seq[String], warmed: String => Try[Long]): Seq[Run] = {
     val sc = spark.sparkContext
     val jobs = new AtomicInteger
     val tasks = new AtomicInteger
@@ -307,9 +320,9 @@ object Probe {
     sc.addSparkListener(listener)
     spark.streams.addListener(streamListener)
     try names.flatMap { n =>
-      val warmed = Try(scoped(spark)(SparkEntry.queries(n)(spark, warm).count()))
+      val warm = warmed(n)
       dirs.map { d =>
-        warmed.flatMap(_ => Try(measureOne(n, d)))
+        warm.flatMap(_ => Try(measureOne(n, d)))
           .recover { case e => Run(n, d, Some(message(e))) }.get
       }
     } finally {
@@ -319,21 +332,22 @@ object Probe {
     }
   }
 
-  /** `query` at each (multiplier, dir) of `dirs`: [[ScalePasses]]
-    * [[measure]] passes, warmed at the smallest size, each preceded by
-    * `settle()`, the pass's load sentinel. Passes reading over
+  /** `query` at each (multiplier, dir) of `dirs`: one warm-up at the
+    * smallest size, then [[ScalePasses]] measured passes, each preceded
+    * by `settle()`, the pass's load sentinel. Passes reading over
     * [[LoadOk]] are replaced, at most [[LoadReplace]] times.
     */
   def scaleRow(spark: SparkSession, query: String, dirs: Seq[(Int, String)],
       settle: () => Double): Scaled = {
     val sized = dirs.sortBy(_._1)
+    val warm = warmUp(spark, query, sized.head._2)
     val passes = ArrayBuffer.empty[(Double, Seq[Run])]
     def clean = passes.filter(_._1 <= LoadOk)
     while (passes.size < ScalePasses || (clean.size < ScalePasses &&
         passes.size < ScalePasses + LoadReplace)) {
       val load = settle()
-      passes += load -> measure(spark, Seq(query), sized.map(_._2),
-        sized.head._2)
+      passes += load -> measureWarmed(spark, Seq(query), sized.map(_._2),
+        _ => warm)
     }
     val kept = if (clean.nonEmpty) clean else passes
     val cells = sized.indices.map { i =>

@@ -45,9 +45,7 @@ class SessionBoundarySpec extends SparkSpec {
     ms.addData((1L, t0), (1L, t1), (1L, t2))
     val sessions = streaming.EventStream.timeoutSessions(
       ms.toDF().toDF("user_id", "ts"))
-    val out = streaming.EventStream.runToMemory(spark, sessions.toDF(),
-      s"boundary_sink_${System.nanoTime}", outputMode = "append",
-      keepNoDataBatches = true)
+    val out = streaming.EventStream.runToMemory(spark, sessions.toDF())
       .collect()
     assert(out.length == 1, out.mkString("; "))
     assert(out.head.getAs[Long]("n_events") == 2L)

@@ -54,9 +54,7 @@ class TimeoutSessionsSpec extends SparkSpec {
       .option("maxFilesPerTrigger", 1)
       .parquet(watch)
     val emitted = streaming.EventStream.runToMemory(spark,
-      streaming.EventStream.timeoutSessions(stream).toDF(),
-      s"st05x_sink_${System.nanoTime}", outputMode = "append",
-      keepNoDataBatches = true)
+      streaming.EventStream.timeoutSessions(stream).toDF())
       .select(col("user_id"),
         date_format(col("session_start"), "HH:mm").as("s"),
         date_format(col("session_end"), "HH:mm").as("e"),
