@@ -1,9 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.scheduler.SparkListener
+import org.apache.spark.sql.{classic, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.{StreamExecution,
+  StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-  OutputMode, TimeMode, Trigger}
+  OutputMode, StreamingQuery, TimeMode, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface over the `events` table.
@@ -343,8 +346,12 @@ object EventStream {
     * on `spark` only across `start()`: the query clones the session when
     * it is built and reads them from that clone, so a batch query
     * planned on `spark` while the drain runs sees the session's own
-    * values (StreamConfWindowSpec). The memory sink's name is generated
-    * and its view dropped on return.
+    * values (StreamConfWindowSpec). The window is one lock across every
+    * session, so two drains cannot restore each other's values. The
+    * memory sink's name is generated and its view dropped on return, and
+    * the listener bus the query's cloned session registered on the
+    * SparkContext is removed once the query has terminated
+    * (StreamListenerBusSpec).
     *
     * @param statePartitions shuffle/state-store partition count for the
     *   drain. Stateful operators open one state-store instance PER
@@ -390,8 +397,8 @@ object EventStream {
     ) ++ Option.when(rocksdb)("spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val name = "drain_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    val q =
+    val q = ConfWindow.synchronized {
+      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
       try {
         confs.foreach { case (k, v) => spark.conf.set(k, v) }
         agg.writeStream
@@ -404,10 +411,12 @@ object EventStream {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None)    => spark.conf.unset(k)
       }
+    }
     try q.processAllAvailable()
     finally {
       q.stop()
-      q.awaitTermination()
+      try q.awaitTermination()
+      finally spark.sparkContext.removeSparkListener(cloneListenerBus(q))
     }
     // localize the result and DROP the memory sink's temp view: each
     // drain otherwise leaves its full result set registered in the
@@ -421,5 +430,26 @@ object EventStream {
       java.util.Arrays.asList(sink.collect(): _*), sink.schema)
     spark.catalog.dropTempView(name)
     out
+  }
+
+  /** Serializes [[runToMemory]]'s save-set-start-restore conf window. */
+  private object ConfWindow
+
+  /** The listener bus of the session a streaming query runs on: Spark
+    * clones the caller's session per query, and the clone's
+    * `StreamingQueryManager` adds its own bus to the SparkContext's
+    * listener queue, where it stays for the context's lifetime. The
+    * query posts its events through the caller's session, so the
+    * clone's bus carries no listener. Both the clone and its bus are
+    * non-public members, hence the reflective reads.
+    */
+  private def cloneListenerBus(q: StreamingQuery): SparkListener = {
+    val clone = classOf[StreamExecution].getMethod("sparkSessionForStream")
+      .invoke(q.asInstanceOf[StreamingQueryWrapper].streamingQuery)
+      .asInstanceOf[classic.SparkSession]
+    val bus = classOf[classic.StreamingQueryManager]
+      .getDeclaredField("listenerBus")
+    bus.setAccessible(true)
+    bus.get(clone.streams).asInstanceOf[SparkListener]
   }
 }

@@ -1,16 +1,16 @@
 package graft
 
-/** Facade smoke: typed entry points resolve and return rows. */
+/** Facade smoke: registry rows run by name and return rows. */
 class GraftSpec extends SparkSpec {
   test("facade entry points return rows") {
-    assert(Graft.dedup.exact(spark, sf).count() > 0)
-    assert(Graft.text.tokens(spark, sf).count() > 0)
-    assert(Graft.similarity.ivfSearch(spark, sf).count() > 0)
-    assert(Graft.similarity.srpSearch(spark, sf).count() > 0)
-    assert(Graft.similarity.pqSearch(spark, sf).count() > 0)
-    assert(Graft.multimodal.frameSamples(spark, sf).count() > 0)
-    assert(Graft.calendar(spark, sf).count() > 0)
-    assert(Graft.run("j01_inner_join", spark, sf).count() > 0)
+    val rdds = spark.sparkContext.getPersistentRDDs.keySet
+    Seq("x05_dedup_exact", "x01_text_tokens", "x12_ann_ivf_search",
+      "x89_srp_lsh_ann", "x82_pq_adc_search", "mm02_frame_sample",
+      "u06_calendar_dim", "j01_inner_join").foreach { name =>
+      assert(Graft.runScoped(name, spark, sf)(_.count()) > 0, name)
+    }
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- rdds
+    assert(left.isEmpty, s"scoped runs left persisted RDDs $left")
   }
 
   test("registerTables enables ad-hoc SQL incl. the dot_long extension") {
