@@ -53,26 +53,7 @@ object GraphQueries {
     */
   private[graft] val BroadcastNodeLimit = 4000000L
 
-  /** Co-purchase PageRank over parts: edge (a, b) with weight = number
-    * of orders whose line items contain both parts; 5 damped rounds
-    * (d = 0.85 spelled as integer 85/15 over 100); top 100 parts.
-    *
-    * The per-edge contribution floor-divides BEFORE summing —
-    * `(rank * w) div wout` per edge, then sum — so both engines
-    * aggregate exactly the same integers regardless of their float
-    * libms or sum orders.
-    */
-  /** Weighted co-purchase edge list (src, dst, w) — the shared graph
-    * under x46 PageRank and x61 label propagation. Pair expansion via
-    * ONE shuffle: group line items by order (collect_set = the oracle's
-    * SELECT DISTINCT), then explode the per-order part set against
-    * itself map-side. Relationally identical to distinct + self-join on
-    * l_orderkey but pays one 600k-row shuffle instead of three
-    * (distinct, join-left, join-right). Fan-out is (items-per-order)² —
-    * bounded by order size (~7 here); a pathological million-item
-    * "order" would need a pre-cap upstream. Persisted: each iterative
-    * round re-scans the cache, not the build.
-    */
+  /** Per-order distinct part sets `(ok, pks)` from lineitem. */
   private def orderSets(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
@@ -101,22 +82,16 @@ object GraphQueries {
       .repartition(s.sparkContext.defaultParallelism, col("ok"))
       .groupBy("ok").agg(collect_set(col("pk")).as("pks"))
 
-  /** Opt-in hot-order skew lever (the graph twin of x08's `dfCap` /
-    * x06's `bandCap` / x11's `bucketCap`): an order whose distinct-item
-    * set exceeds `orderCap` is dropped BEFORE the (items-per-order)²
-    * pair explosion, bounding the per-order fan-out to orderCap². On
-    * this data order size is ~7 so the default (None) is exact; a
-    * pathological million-item "order" (a merged cart, a bot session)
-    * would otherwise emit 10¹² pairs from one group. Dropping the whole
-    * order (not sampling within it) keeps the capped semantics
-    * hand-derivable: the capped graph IS the exact graph of the
-    * filtered order set, so wout/edges stay mutually consistent.
-    * Pinned by GraphOrderCapSpec on a synthetic hot order.
+  /** Weighted co-purchase edge list (src, dst, w) — the shared graph
+    * under x46 PageRank and x61 label propagation. Pair expansion via
+    * ONE shuffle: group line items by order (collect_set = the oracle's
+    * SELECT DISTINCT, [[orderSets]]), then explode the per-order part
+    * set against itself map-side. Relationally identical to distinct +
+    * self-join on l_orderkey but pays one 600k-row shuffle instead of
+    * three (distinct, join-left, join-right). Fan-out is
+    * (items-per-order)² — bounded by order size (~7 here); a
+    * pathological million-item "order" would need a pre-cap upstream.
     */
-  private[graft] def cappedSets(sets: DataFrame,
-      orderCap: Option[Int]): DataFrame =
-    orderCap.fold(sets)(k => sets.filter(size(col("pks")) <= k))
-
   private def pairsFrom(sets: DataFrame): DataFrame =
     sets
       .select(explode(col("pks")).as("src"), col("pks"))
@@ -124,10 +99,11 @@ object GraphQueries {
       .filter(col("src") =!= col("dst"))
       .groupBy("src", "dst").agg(count(lit(1)).as("w"))
 
-  private def copurchaseEdges(s: SparkSession, d: String,
-      orderCap: Option[Int] = None): DataFrame =
-    pairsFrom(cappedSets(orderSets(s, d), orderCap))
-      .transform(graft.Caches.scoped)
+  /** [[pairsFrom]] over lineitem, persisted: each consumer re-scans
+    * the cache, not the build.
+    */
+  private def copurchaseEdges(s: SparkSession, d: String): DataFrame =
+    pairsFrom(orderSets(s, d)).transform(graft.Caches.scoped)
 
   /** The DuckDB spelling of [[copurchaseEdges]] (CTEs `li`, `e`). */
   private val edgeCtes: String =
@@ -139,12 +115,21 @@ e AS (
   GROUP BY 1, 2
 )"""
 
+  /** Co-purchase PageRank over parts: edge (a, b) with weight = number
+    * of orders whose line items contain both parts; [[PrRounds]] damped
+    * rounds (d = 0.85 spelled as integer 85/15 over 100); top 100 parts.
+    *
+    * The per-edge contribution floor-divides BEFORE summing —
+    * `(rank * w) div wout` per edge, then sum — so both engines
+    * aggregate exactly the same integers regardless of their float
+    * libms or sum orders.
+    */
   def partPagerank(s: SparkSession, d: String): DataFrame =
-    partPagerank(s, d, BroadcastNodeLimit, None)
+    partPagerank(s, d, BroadcastNodeLimit)
 
   private[graft] def partPagerank(s: SparkSession, d: String,
-      flipAt: Long, orderCap: Option[Int]): DataFrame = {
-    val (ew, nodes, n, useBroadcast) = transitionTable(s, d, flipAt, orderCap)
+      flipAt: Long): DataFrame = {
+    val (ew, nodes, n, useBroadcast) = transitionTable(s, d, flipAt)
     pagerankFrom(ew, nodes, n, useBroadcast)
   }
 
@@ -154,8 +139,7 @@ e AS (
     * artifact build share one spelling.
     */
   private[graft] def transitionTable(s: SparkSession, d: String,
-      flipAt: Long, orderCap: Option[Int])
-      : (DataFrame, DataFrame, Long, Boolean) = {
+      flipAt: Long): (DataFrame, DataFrame, Long, Boolean) = {
     // wout comes from the per-order sets, NOT from a second pass over the
     // edge list: Σ_dst w(src,dst) counts (order, dst) co-occurrences, so
     // wout(src) = Σ_{orders ∋ src} (|pks| − 1) — one cheap aggregation on
@@ -165,8 +149,7 @@ e AS (
     // list itself is consumed exactly once into `ew`, so only the joined
     // transition table is edge-sized and persisted — every PageRank
     // round scans IT directly.
-    val sets = cappedSets(orderSets(s, d), orderCap)
-      .transform(graft.Caches.scoped)
+    val sets = orderSets(s, d).transform(graft.Caches.scoped)
     // persisted: the flip-decision count below materializes this one
     // explode+agg pass and the transition build then reads the cache —
     // the decision costs a count over |nodes| cached rows, not a second
@@ -311,13 +294,12 @@ LIMIT 100"""
     * edge list, never node² (the x14 Components argument).
     */
   def labelPropagation(s: SparkSession, d: String): DataFrame =
-    labelPropagation(s, d, BroadcastNodeLimit, None)
+    labelPropagation(s, d, BroadcastNodeLimit)
 
   private[graft] def labelPropagation(s: SparkSession, d: String,
-      flipAt: Long, orderCap: Option[Int]): DataFrame = {
+      flipAt: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sets = cappedSets(orderSets(s, d), orderCap)
-      .transform(graft.Caches.scoped)
+    val sets = orderSets(s, d).transform(graft.Caches.scoped)
     val edges = pairsFrom(sets)
       .transform(graft.Caches.scoped)
     // node set from the pre-pair sets, not a distinct over the edge
@@ -578,8 +560,7 @@ ORDER BY p_partkey"""
   * an application derives it once per data version — the
   * [[AuditServe]] discipline keyed on `lineitem.parquet`. The node
   * count persists alongside as a manifest so the serve row's
-  * broadcast/shuffle flip needs no count() job at plan construction
-  * (the [[SimilarityQueries.centroidsFrom]] move).
+  * broadcast/shuffle flip needs no count() job at plan construction.
   */
 object GraphServe {
 
@@ -601,7 +582,7 @@ object GraphServe {
       // the scope releases the build's caches; a clearCache here would
       // also drop those of the enclosing query and of concurrent scopes
       val (ew, nodes, n, _) = GraphQueries.transitionTable(
-        s, dir, GraphQueries.BroadcastNodeLimit, None)
+        s, dir, GraphQueries.BroadcastNodeLimit)
       // partitioned on src: each round's state join reads it keyed the
       // way the shuffle path would re-key it anyway
       ew.repartition(col("src"))

@@ -26,8 +26,9 @@ object Serve {
   /** Version of the embeddings-keyed builders (IVF index, semantic
     * clusters, PQ books + codes — [[SimilarityQueries.prepareServe]]):
     * v11 = the persisted coarse router layer (`coarse/centroids`)
-    * joined the artifact set (v10 added the router-flip count manifest
-    * `centroid_count.txt`).
+    * joined the artifact set. An older v11 root may also hold a
+    * centroid-count text file; nothing reads it, and [[complete]]
+    * checks only directories.
     */
   private[operators] val IndexBuilderVersion = 11
 
@@ -42,7 +43,10 @@ object Serve {
     */
   private[operators] val GraphBuilderVersion = 1
 
-  private[operators] def root(dir: String, dataFile: String,
+  /** The serve root for one data file at one builder version; the
+    * version is part of the hashed key, so a version bump moves it.
+    */
+  private[graft] def root(dir: String, dataFile: String,
       version: Int): String = {
     val f = new java.io.File(s"$dir/$dataFile")
     val key = java.security.MessageDigest.getInstance("MD5")
@@ -51,13 +55,6 @@ object Serve {
       .map("%02x".format(_)).mkString
     s"${sys.props("java.io.tmpdir")}/graft_serve/$key"
   }
-
-  /** Spec hook: the root for an explicit version, so the builder-version
-    * sensitivity of the key (the r5 staleness-bug class) is pinnable —
-    * `root(d, f, v) != root(d, f, v + 1)` — without mutating constants.
-    */
-  private[graft] def rootAtVersion(dir: String, dataFile: String,
-      version: Int): String = root(dir, dataFile, version)
 
   /** Completeness of a serve root: the `_READY` marker ALONE is
     * insufficient — every artifact dir must also exist, or a partially

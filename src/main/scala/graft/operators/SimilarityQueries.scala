@@ -138,17 +138,12 @@ object SimilarityQueries {
     * two-level (coarse→fine) assignment, which reuses this same fold
     * per level.
     *
-    * THE √n BROADCAST HAS A CEILING, AND THE ROUTERS FLIP AUTOMATICALLY
-    * AT IT: the packed centroid row costs ~600 B/centroid (64 int64
-    * components + id + norm), so at the advertised 10¹¹-vector scale
-    * √n ≈ 3·10⁵ centroids is a ~200 MB broadcast built through a
-    * driver-side collect — the same OOM-class risk the graph rounds
-    * flip away from at [[GraphQueries.BroadcastNodeLimit]]. Past
-    * [[BroadcastCentroidLimit]] centroids, [[assignedBuckets]] and
-    * [[probeBuckets]] stop broadcasting and run the shuffle-shaped
-    * spelling instead (cartesian fan-out over a PROJECTED key/vec/norm
-    * frame + key-partitioned argmax/top-N — see [[nearestCentroidShuffle]]);
-    * IvfFlipSpec pins both paths row-identical.
+    * THE √n BROADCAST HAS A CEILING: the packed centroid row costs
+    * ~600 B/centroid (64 int64 components + id + norm), so at the
+    * advertised 10¹¹-vector scale √n ≈ 3·10⁵ centroids is a ~200 MB
+    * broadcast built through a driver-side collect. A C past that
+    * budget is the two-level router's job (x99, [[twoLevelRoute]]):
+    * only the √C-row coarse table is broadcast there.
     */
   private[graft] def initCentroids(e: DataFrame): DataFrame = {
     val budget = e.agg(
@@ -205,70 +200,10 @@ object SimilarityQueries {
       .orderBy("q_id", "rank")
   }
 
-  /** Centroid count above which the consumer-facing routers
-    * ([[assignedBuckets]], [[probeBuckets]]) stop broadcasting the
-    * packed centroid table and flip to the shuffle spelling — the
-    * [[GraphQueries.BroadcastNodeLimit]] discipline applied to the IVF
-    * router. At ~600 B per packed centroid (64 int64 components + id +
-    * norm + array overhead), 131072 centroids ≈ 80 MB of single-row
-    * broadcast state assembled through a driver collect; past that the
-    * broadcast is the memory risk, while the shuffle path's cost is two
-    * row-key-partitioned exchanges that scale out. Under the √n budget
-    * this bound corresponds to a ~1.7·10¹⁰-vector corpus; beyond it the
-    * per-row O(√n·d) scoring itself dominates and the documented next
-    * step is two-level coarse→fine routing (see [[initCentroids]]).
-    * Both paths compute identical rows (IvfFlipSpec pins this); the
-    * flip probe costs at most one count() of the (persisted) centroid
-    * table per query chain — memoized per table instance
-    * ([[centroidCount]]), and on the serve paths not even that: the
-    * count persists into the index manifest at build time and
-    * [[centroidsFrom]] seeds the memo from it, so constructing a serve
-    * plan runs ZERO jobs (IvfIndexSpec pins the job count). Training
-    * iterations ([[assignNearest]]) keep the broadcast fold: their
-    * interim centroid frames are unpersisted plan fragments a count()
-    * would double-evaluate, and past this bound a corpus retrains via
-    * sampled/two-level training long before Lloyd-over-everything is
-    * the plan.
-    */
-  private[graft] val BroadcastCentroidLimit = 131072L
-
-  /** Per-instance memo for the router flip probes: one query chain
-    * passes the SAME persisted centroid frame to [[assignedBuckets]]
-    * and [[probeBuckets]], so the second probe must not re-run the
-    * count job. Weak keys (Dataset equality is reference equality), so
-    * entries die with their frames.
-    */
-  private val centCounts = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[DataFrame, java.lang.Long]())
-
-  private def centroidCount(cent: DataFrame): Long = {
-    val cached = centCounts.get(cent)
-    if (cached != null) cached.longValue
-    else { val n = cent.count(); centCounts.put(cent, n); n }
-  }
-
-  /** Manifest file carrying the centroid count next to the persisted
-    * centroid table, written by [[buildIndex]] and read by
-    * [[centroidsFrom]] — the serve paths' routers decide the
-    * broadcast/shuffle flip from it without any Spark action.
-    */
-  private def countManifest(indexPath: String) =
-    java.nio.file.Paths.get(s"$indexPath/centroid_count.txt")
-
-  /** Read a persisted centroid table, seeding the flip-probe memo from
-    * the build-time manifest when present (absent on pre-v10 roots —
-    * the router then falls back to one memoized count()).
-    */
+  /** The centroid table persisted by [[buildIndex]] under `indexPath`. */
   private[operators] def centroidsFrom(s: SparkSession,
-      indexPath: String): DataFrame = {
-    val cent = Tables.parquet(s, s"$indexPath/centroids")
-    val mf = countManifest(indexPath)
-    if (java.nio.file.Files.exists(mf))
-      centCounts.put(cent,
-        java.lang.Long.valueOf(
-          java.nio.file.Files.readString(mf).trim.toLong))
-    cent
-  }
+      indexPath: String): DataFrame =
+    Tables.parquet(s, s"$indexPath/centroids")
 
   /** The whole centroid table packed into ONE broadcast row
     * (`collect_list` of ≤ NCentroids structs) — the shape every
@@ -305,33 +240,6 @@ object SimilarityQueries {
                             OR (x.cos = acc.cos AND x.id < acc.id)
                            THEN x ELSE acc END)"""))
       .drop("cents")
-
-  /** The shuffle-shaped twin of [[nearestCentroid]] for past-the-limit
-    * centroid tables (see [[BroadcastCentroidLimit]]): fan out a
-    * PROJECTED (key, vec, norm) frame against the un-broadcast centroid
-    * table (cartesian — no 80 MB+ driver-assembled packed row), argmax
-    * per key with `max(struct(cos, −c_id, c_id))` — which partially
-    * aggregates map-side, so the exchange carries at most one row per
-    * (key, input partition) — then one key-partitioned join back to the
-    * full input row. Tie semantics are identical to the fold: equal
-    * cosines fall through to the highest −c_id = lowest c_id, and the
-    * zero-norm guard in [[sparkCos]] means no NaN can enter the struct
-    * ordering. Adds the same `best STRUCT<id, cos>` column.
-    */
-  private def nearestCentroidShuffle(e: DataFrame, cent: DataFrame,
-      vec: String, nrm: String, key: String): DataFrame = {
-    val best = e.select(col(key), col(vec).as("__v"), col(nrm).as("__n"))
-      .crossJoin(cent)
-      .select(col(key),
-        expr(sparkCos("c_qe", "c_qn", "__v", "__n")).as("cos"),
-        col("c_id"))
-      .groupBy(key)
-      .agg(max(struct(col("cos"), (-col("c_id")).as("neg"),
-        col("c_id").as("id"))).as("mx"))
-      .select(col(key),
-        struct(col("mx.id").as("id"), col("mx.cos").as("cos")).as("best"))
-    e.join(best, key)
-  }
 
   /** One nearest-centroid assignment pass (training-time spelling). */
   private def assignNearest(e: DataFrame, cent: DataFrame): DataFrame =
@@ -636,26 +544,16 @@ clusters AS (SELECT vec_id, label AS cluster_id FROM lv$EmbCcRounds)"""
   }
 
   /** Corpus → nearest-centroid bucket assignment (the IVF partitioning
-    * step): below [[BroadcastCentroidLimit]] centroids, broadcast packed
-    * centroids + map-only argmax fold ([[nearestCentroid]]) — no
-    * fan-out, no window shuffle; past it, the automatic flip to
-    * [[nearestCentroidShuffle]] (row-identical, IvfFlipSpec). Persisted
+    * step): broadcast packed centroids + map-only argmax fold
+    * ([[nearestCentroid]]) — no fan-out, no window shuffle. Persisted
     * because every consumer (x10 stats, x11 self-join, x12 search) reads
     * it more than once.
     */
-  private[operators] def assignedBuckets(e: DataFrame, cent: DataFrame): DataFrame =
-    assignedBuckets(e, cent, BroadcastCentroidLimit)
-
-  private[graft] def assignedBuckets(e: DataFrame, cent: DataFrame,
-      flipAt: Long): DataFrame = {
-    val scored =
-      if (centroidCount(cent) < flipAt) nearestCentroid(e, cent)
-      else nearestCentroidShuffle(e, cent, "qe", "qn", "vec_id")
-    scored
+  private[graft] def assignedBuckets(e: DataFrame, cent: DataFrame): DataFrame =
+    nearestCentroid(e, cent)
       .select(col("vec_id"), col("qe"), col("qn"),
         col("best.id").as("bucket"), col("best.cos").as("centroid_cos"))
       .transform(graft.Caches.scoped)
-  }
 
   /** Probe routing — the same map-only shape as [[nearestCentroid]],
     * widened to top-NProbe: score the packed centroid array, sort the
@@ -666,41 +564,24 @@ clusters AS (SELECT vec_id, label AS cluster_id FROM lv$EmbCcRounds)"""
     * probes arrive. Shared by [[nprobeTopK]] and the IVFADC composite
     * (`x85_ivfpq_search`). Yields (q_id, q_qe, q_qn, bucket).
     *
-    * Past [[BroadcastCentroidLimit]] centroids the packed row itself is
-    * the problem, and routing flips to the fan-out + per-probe window
-    * spelling (one q_id-keyed shuffle; identical total order, so
-    * identical buckets — IvfFlipSpec).
+    * A centroid table past the broadcast budget is routed by x99's
+    * two-level router instead ([[twoLevelRoute]]).
     */
   private[operators] def probeBuckets(probes: DataFrame,
       cent: DataFrame): DataFrame =
-    probeBuckets(probes, cent, BroadcastCentroidLimit)
-
-  private[graft] def probeBuckets(probes: DataFrame, cent: DataFrame,
-      flipAt: Long): DataFrame =
-    if (centroidCount(cent) < flipAt)
-      probes
-        .crossJoin(broadcast(packedCentroids(cent)))
-        .withColumn("topb", expr(s"""
-          slice(array_sort(
-            transform(cents, c -> named_struct('id', c.c_id, 'cos',
-              ${sparkCos("c.c_qe", "c.c_qn", "q_qe", "q_qn")})),
-            (l, r) -> CASE WHEN l.cos > r.cos THEN -1
-                           WHEN l.cos < r.cos THEN 1
-                           WHEN l.id < r.id THEN -1
-                           WHEN l.id > r.id THEN 1 ELSE 0 END),
-            1, $NProbe)"""))
-        .select(col("q_id"), col("q_qe"), col("q_qn"),
-          explode(expr("transform(topb, t -> t.id)")).as("bucket"))
-    else
-      probes
-        .crossJoin(cent)
-        .withColumn("cos",
-          expr(sparkCos("c_qe", "c_qn", "q_qe", "q_qn")))
-        .withColumn("__rn", row_number().over(
-          Window.partitionBy("q_id").orderBy(desc("cos"), col("c_id"))))
-        .filter(col("__rn") <= NProbe)
-        .select(col("q_id"), col("q_qe"), col("q_qn"),
-          col("c_id").as("bucket"))
+    probes
+      .crossJoin(broadcast(packedCentroids(cent)))
+      .withColumn("topb", expr(s"""
+        slice(array_sort(
+          transform(cents, c -> named_struct('id', c.c_id, 'cos',
+            ${sparkCos("c.c_qe", "c.c_qn", "q_qe", "q_qn")})),
+          (l, r) -> CASE WHEN l.cos > r.cos THEN -1
+                         WHEN l.cos < r.cos THEN 1
+                         WHEN l.id < r.id THEN -1
+                         WHEN l.id > r.id THEN 1 ELSE 0 END),
+          1, $NProbe)"""))
+      .select(col("q_id"), col("q_qe"), col("q_qn"),
+        explode(expr("transform(topb, t -> t.id)")).as("bucket"))
 
   /** The probe-routing CTE (`name(q_id, q_qe, q_qn, bucket)`) in DuckDB
     * SQL — the oracle twin of [[probeBuckets]], shared by the x12
@@ -720,11 +601,10 @@ clusters AS (SELECT vec_id, label AS cluster_id FROM lv$EmbCcRounds)"""
     * coarse layer holds `max(CoarseFloor, ceil(√C))` centroids trained
     * over the C fine centroids (the √ discipline applied one level up),
     * and a probe expands its top [[CoarseProbe]] coarse groups before
-    * the fine argmax. At the documented flip bound (C past
-    * [[BroadcastCentroidLimit]]) this turns per-probe routing cost from
-    * O(C) into O(√C · CoarseProbe + C/√C · CoarseProbe) with only the
-    * √C-row coarse table broadcast — the next step the flip docs
-    * promise, implemented and oracle-pinned rather than cited.
+    * the fine argmax. This turns per-probe routing cost from O(C) into
+    * O(√C · CoarseProbe + C/√C · CoarseProbe) with only the √C-row
+    * coarse table broadcast — the router for a C past the flat
+    * router's broadcast budget (see [[initCentroids]]).
     */
   private val CoarseFloor = 4L
   private val CoarseProbe = 2
@@ -744,10 +624,10 @@ clusters AS (SELECT vec_id, label AS cluster_id FROM lv$EmbCcRounds)"""
   }
 
   /** The x99s serve spelling: BOTH layers from the persisted index —
-    * fine centroids from the manifest-seeded artifact, coarse groups
+    * fine centroids from the `ivf/centroids` artifact, coarse groups
     * from the `coarse/centroids` artifact built beside them by
-    * [[prepareServe]] — zero training jobs, zero count() jobs
-    * (IvfIndexSpec pins the job count at plan construction). Staleness
+    * [[prepareServe]] — zero jobs at plan construction (IvfIndexSpec
+    * pins the job count). Staleness
     * is bounded by co-residence: the coarse layer lives in the SAME
     * versioned root as the fine layer it was trained over, so a data
     * refresh or builder-version bump invalidates both together and the
@@ -1046,10 +926,6 @@ WHERE rn <= $K ORDER BY q_id, rank"""
     // bucket lands in exactly one task after the hash repartition).
     cent.coalesce(1).write.mode("overwrite")
       .parquet(s"$indexPath/centroids")
-    // the router-flip manifest: serve-path plan construction reads the
-    // centroid count from here instead of running a count() job
-    java.nio.file.Files.writeString(countManifest(indexPath),
-      centroidCount(cent).toString)
     assignedBuckets(e, cent)
       .select(col("vec_id"), col("qe"), col("qn"), col("bucket"))
       .repartition(col("bucket"))
@@ -2088,9 +1964,8 @@ FROM clusters ORDER BY vec_id"""),
       Some(x88Oracle),
       "new-batch assignment against frozen centroids + growth audit"),
 
-    // ── Two-level coarse→fine probe routing — the scale path the
-    // BroadcastCentroidLimit docs promise for C past the flip bound:
-    // Lloyd over the fine centroid table yields √C coarse groups, a
+    // ── Two-level coarse→fine probe routing — the scale path for a C
+    // past the flat router's broadcast budget: Lloyd over the fine centroid table yields √C coarse groups, a
     // probe scores those (broadcast fold), expands its top CoarseProbe
     // groups, and argmaxes only their fine members. Approximate by
     // design; the in_flat column audits agreement with the flat
@@ -2102,7 +1977,7 @@ FROM clusters ORDER BY vec_id"""),
       "two-level coarse->fine IVF routing + flat-router agreement"),
 
     // ── x99 served from the persisted index: fine centroids from the
-    // manifest-seeded artifact, coarse groups from the coarse artifact
+    // ivf artifact, coarse groups from the coarse artifact
     // built beside them — zero training jobs per call (IvfIndexSpec
     // pins zero jobs at plan construction). Identical rows (the coarse
     // trainer is deterministic in the fine table — the oracle IS x99's).

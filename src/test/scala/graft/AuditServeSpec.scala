@@ -73,14 +73,14 @@ class AuditServeSpec extends SparkSpec {
     // root (a rebuild of one must not clobber the other), and the root
     // must MOVE when the builder version moves (the round-5 staleness
     // bug: data-identity-only keys replayed an old algorithm's output).
-    // rootAtVersion pins the sensitivity directly: dropping the version
+    // Serve.root pins the sensitivity directly: dropping the version
     // component from the hashed key makes these collide and this fails.
     val docRoot = operators.AuditServe.root(sf)
     val embRoot = operators.SimilarityQueries.serveRoot(sf)
     assert(docRoot != embRoot)
     assert(docRoot.contains("graft_serve") && embRoot.contains("graft_serve"))
-    val v1 = operators.Serve.rootAtVersion(sf, "documents.parquet", 1)
-    val v2 = operators.Serve.rootAtVersion(sf, "documents.parquet", 2)
+    val v1 = operators.Serve.root(sf, "documents.parquet", 1)
+    val v2 = operators.Serve.root(sf, "documents.parquet", 2)
     assert(v1 != v2, "bumping the builder version must move the root")
   }
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Pins the automatic broadcast→shuffle flip in the iterative graph
   * queries (x46 PageRank, x61 label propagation): below
   * `BroadcastNodeLimit` each round broadcasts the per-node state table,
@@ -30,11 +28,11 @@ class GraphFlipSpec extends SparkSpec {
 
   test("x46 broadcast and shuffle round paths produce identical ranks") {
     val bc = operators.GraphQueries
-      .partPagerank(spark, sf, flipAt = Long.MaxValue, orderCap = None)
+      .partPagerank(spark, sf, flipAt = Long.MaxValue)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val sh = withoutAutoBroadcast {
       operators.GraphQueries
-        .partPagerank(spark, sf, flipAt = 0L, orderCap = None)
+        .partPagerank(spark, sf, flipAt = 0L)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     }
     assert(bc.nonEmpty)
@@ -43,11 +41,11 @@ class GraphFlipSpec extends SparkSpec {
 
   test("x61 broadcast and shuffle round paths produce identical labels") {
     val bc = operators.GraphQueries
-      .labelPropagation(spark, sf, flipAt = Long.MaxValue, orderCap = None)
+      .labelPropagation(spark, sf, flipAt = Long.MaxValue)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val sh = withoutAutoBroadcast {
       operators.GraphQueries
-        .labelPropagation(spark, sf, flipAt = 0L, orderCap = None)
+        .labelPropagation(spark, sf, flipAt = 0L)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     }
     assert(bc.nonEmpty)
@@ -60,57 +58,8 @@ class GraphFlipSpec extends SparkSpec {
     val a = operators.GraphQueries.partPagerank(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val b = operators.GraphQueries.partPagerank(spark, sf,
-      operators.GraphQueries.BroadcastNodeLimit, None)
+      operators.GraphQueries.BroadcastNodeLimit)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(a == b)
-  }
-}
-
-/** Pins the opt-in `orderCap` hot-order lever: a pathological order
-  * with a huge distinct-item set is dropped BEFORE the
-  * (items-per-order)² pair explosion, and the capped result equals the
-  * exact result computed over the data with that order removed —
-  * "capped graph = exact graph of the filtered order set", the
-  * hand-derivable semantics the cap promises.
-  */
-class GraphOrderCapSpec extends SparkSpec {
-
-  test("orderCap drops a synthetic hot order from the pair explosion") {
-    import spark.implicits._
-    // three normal 2-item orders + one 50-item hot order
-    val normal = Seq(
-      (1L, 101L), (1L, 102L),
-      (2L, 102L), (2L, 103L),
-      (3L, 101L), (3L, 103L))
-    val hot = (1 to 50).map(i => (99L, 1000L + i))
-    val sets = (normal ++ hot).toDF("ok", "pk")
-      .groupBy("ok").agg(collect_set(col("pk")).as("pks"))
-
-    val capped = operators.GraphQueries.cappedSets(sets, Some(10))
-    assert(capped.count() == 3L, "the 50-item order must be dropped")
-    // every surviving set is within the cap
-    assert(capped.filter(size(col("pks")) > 10).count() == 0L)
-
-    val uncapped = operators.GraphQueries.cappedSets(sets, None)
-    assert(uncapped.count() == 4L, "None = exact parity, nothing dropped")
-
-    // the capped pair fan-out is exactly the exact fan-out of the
-    // filtered set: 3 orders × 2 items × (2−1) = 6 directed pairs
-    val pairs = capped
-      .select(explode(col("pks")).as("src"), col("pks"))
-      .select(col("src"), explode(col("pks")).as("dst"))
-      .filter(col("src") =!= col("dst"))
-    assert(pairs.count() == 6L)
-  }
-
-  test("capped pagerank equals exact pagerank when no order exceeds the cap") {
-    // sf0.001 order sizes are small; a generous cap must be a no-op
-    val exact = operators.GraphQueries
-      .partPagerank(spark, sf, Long.MaxValue, None)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val capped = operators.GraphQueries
-      .partPagerank(spark, sf, Long.MaxValue, Some(1000))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(exact == capped)
   }
 }

@@ -7,6 +7,30 @@ package graft
   */
 class IvfIndexSpec extends SparkSpec {
 
+  /** One entry per Spark job `body` starts: its stage names, which carry
+    * the call site (`count at …`; AQE stages submitted from its pool
+    * name `CompletableFuture` instead). The job's `callSite.short`
+    * property is unset unless code calls `setCallSite`, so it cannot
+    * tell jobs apart. The listener bus is async, so it is drained
+    * before reading, not slept on (a loaded host can outlast a fixed
+    * pause).
+    */
+  private def jobStages(body: => Unit): Seq[String] = {
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        stages.add(j.stageInfos.map(_.name).distinct.mkString(", "))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusDrain.waitUntilEmpty(
+        spark.sparkContext, 30000L)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    stages.toArray(Array.empty[String]).toSeq
+  }
+
   test("searchIndex over a built index equals the self-contained x12") {
     val idx = java.nio.file.Files.createTempDirectory("ivf").toString
     operators.SimilarityQueries.buildIndex(spark, sf, idx)
@@ -27,37 +51,50 @@ class IvfIndexSpec extends SparkSpec {
     assert(parts.length > 1, s"expected bucket=* dirs, got ${parts.length}")
   }
 
-  test("serve-plan construction runs zero count() jobs: the router " +
-    "flip reads the centroid count from the index manifest") {
+  test("serve-plan construction runs zero count() jobs") {
     // warm the artifacts so construction below is pure plan building
     operators.SimilarityQueries.prepareServe(spark, sf)
     spark.catalog.clearCache()
-    val countJobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val site = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short")))
-          .getOrElse("")
-        if (site.startsWith("count at")) countJobs.incrementAndGet()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val counts = jobStages {
       for (name <- Seq("x12s_ann_serve", "x85s_ivfpq_serve",
           "x87s_csls_serve", "x96s_negatives_serve",
           "x99s_coarse_route_serve")) {
         SparkEntry.queries(name)(spark, sf) // build the plan, no action
       }
-      // listener bus is async; any count() job would have RUN (blocking)
-      // during construction above — drain the bus deterministically
-      // rather than sleeping (a loaded host can outlast a fixed pause)
-      org.apache.spark.ListenerBusDrain.waitUntilEmpty(
-        spark.sparkContext, 30000L)
-      assert(countJobs.get() == 0,
-        s"serve-plan construction ran ${countJobs.get()} count() jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }.filter(_.contains("count at"))
+    assert(counts.isEmpty,
+      s"serve-plan construction ran ${counts.size} count() jobs")
     spark.catalog.clearCache()
+  }
+
+  test("building a self-contained IVF row's plan launches no Spark job") {
+    // training, assignment and routing are all lazy plan fragments, so
+    // every job belongs to the consumer's action
+    val jobs = Seq("x10_ann_ivf_assign", "x12_ann_ivf_search",
+        "x41_embed_dedup_clusters", "x85_ivfpq_search",
+        "x99_ivf_coarse_route").map { name =>
+      val stages = jobStages(SparkEntry.queries(name)(spark, sf))
+      spark.catalog.clearCache()
+      name -> stages
+    }.filter(_._2.nonEmpty)
+    assert(jobs.isEmpty, s"plan construction ran jobs: $jobs")
+  }
+
+  test("the zero vector routes to the lowest centroid id (the NaN-free " +
+      "cosine contract)") {
+    import spark.implicits._
+    val e = operators.SimilarityQueries.quantizedCached(spark, sf)
+    val cent = operators.SimilarityQueries.trainedCentroids(e)
+    // a dead (all-zero) vector: sparkCos defines its cosine as 0 against
+    // every centroid, so the argmax tie-break must pick the LOWEST c_id
+    val dead = Seq((999999L, Seq.fill(64)(0L), 0L))
+      .toDF("vec_id", "qe", "qn")
+    val minCid = cent.agg(
+      org.apache.spark.sql.functions.min("c_id")).head().getLong(0)
+    val bucket = operators.SimilarityQueries.assignedBuckets(dead, cent)
+      .select("bucket").head().getLong(0)
+    spark.catalog.clearCache()
+    assert(bucket == minCid, s"router picked $bucket, expected $minCid")
   }
 
   test("x99s: the coarse router layer is a persisted artifact — the " +
@@ -72,20 +109,9 @@ class IvfIndexSpec extends SparkSpec {
     // zero jobs at construction: no training folds, no counts, and no
     // schema-inference jobs either (artifact schemas come from the
     // parquet footers, read on the driver by Tables.parquet)
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        j.stageInfos.map(_.name).foreach(jobs.add)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      SparkEntry.queries("x99s_coarse_route_serve")(spark, sf)
-      org.apache.spark.ListenerBusDrain.waitUntilEmpty(
-        spark.sparkContext, 30000L)
-      assert(jobs.isEmpty,
-        s"x99s plan construction ran jobs: $jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs =
+      jobStages(SparkEntry.queries("x99s_coarse_route_serve")(spark, sf))
+    assert(jobs.isEmpty, s"x99s plan construction ran jobs: $jobs")
     // identical rows to the declared x99 (build-time coarse training is
     // deterministic in the fine table, so persisting it changes nothing)
     def rows(name: String) = SparkEntry.queries(name)(spark, sf)

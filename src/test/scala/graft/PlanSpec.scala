@@ -323,7 +323,7 @@ class PlanSpec extends SparkSpec {
     assert(months > 0 && months <= 120, s"w12 window input: $months months")
     // x99's construction-time init window: input = the fine-centroid
     // table; the IVF discipline keeps it ≤ max(64, ceil(√n_vectors))
-    // (the NCentroids floor; ≤ BroadcastCentroidLimit at any scale).
+    // (the NCentroids floor).
     // Measured via the declared x10 assignment's bucket set.
     val nVecs = spark.read.parquet(s"$sf/embeddings.parquet").count()
     val nCentroids = q("x10_ann_ivf_assign")
