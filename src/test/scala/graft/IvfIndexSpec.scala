@@ -8,12 +8,12 @@ package graft
 class IvfIndexSpec extends SparkSpec {
 
   /** One entry per Spark job `body` starts: its stage names, which carry
-    * the call site (`count at …`; AQE stages submitted from its pool
-    * name `CompletableFuture` instead). The job's `callSite.short`
-    * property is unset unless code calls `setCallSite`, so it cannot
-    * tell jobs apart. The listener bus is async, so it is drained
-    * before reading, not slept on (a loaded host can outlast a fixed
-    * pause).
+    * the call site (`count at …`; stages that adaptive execution submits
+    * from its own thread pool read `… at CompletableFuture.java`). The
+    * job's `callSite.short` property is unset unless code calls
+    * `setCallSite`, so it cannot tell jobs apart. The listener bus is
+    * async, so it is drained before reading, not slept on (a loaded host
+    * can outlast a fixed pause).
     */
   private def jobStages(body: => Unit): Seq[String] = {
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
