@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Byte-pair-encoding merge TRAINING (Sennrich, Haddow & Birch, "Neural
   * Machine Translation of Rare Words with Subword Units", ACL 2016 —
@@ -12,69 +13,44 @@ import org.apache.spark.sql.functions._
   * it everywhere) — and emits the learned merge table, which IS a BPE
   * tokenizer's model file.
   *
-  * The scalable spelling (the one production trainers use): train on the
-  * WORD-TYPE table, not the corpus — `(word, count)` is vocabulary-sized
-  * (Heaps' law: sublinear in corpus size), and every pair count weights
-  * by the word's corpus frequency, so the result is identical to
-  * corpus-level training at a tiny fraction of the work. Each round is
-  * one explode + map-side-combined aggregation over that table plus the
-  * selection of a SINGLE pair; the only driver state is that one pair
-  * per round (the d=64 PCA-state precedent — constant-size by
-  * construction, never data-proportional). At 100 TB the word table is
-  * 10⁷-10⁸ rows and the per-round shape is unchanged — and the loop is
-  * kept linear in the round count by the [[CheckpointEvery]] lineage
-  * discipline (without which chained folds made it quadratic). The
-  * practical merge-count bound is per-round driver sequencing, not
-  * data volume — see [[CheckpointEvery]].
+  * Training runs on the WORD-TYPE table, not the corpus: `(word, cnt)`
+  * is vocabulary-sized (Heaps' law: sublinear in corpus size), and every
+  * pair count weights by the word's corpus frequency, so the result is
+  * identical to corpus-level training. Spark builds that table in one
+  * aggregation and the driver collects it once ([[collectedWords]]);
+  * every round then runs in plain Scala over the collected rows — the
+  * Spark MLlib k-means|| shape, which finishes on the driver with
+  * `LocalKMeans` over its small candidate set. Round r depends on round
+  * r−1's choice, so a Spark job per round bought only per-job dispatch.
+  * The one size bound is `spark.driver.maxResultSize`: a word-type table
+  * past it fails the collect loudly, where the per-round-job loop this
+  * replaces ran slowly.
   *
-  * Merge application is the parity trick: a word's symbol segmentation
-  * is kept as the word with `chr(1)` separators (a character that cannot
-  * occur inside space-split words), and applying merge (a, b) is a
-  * per-word left fold over the symbols — merge when the accumulator's
-  * LAST symbol equals `a` and the incoming symbol equals `b`, which is
-  * exactly BPE's greedy left-to-right non-overlapping application
-  * ([x,x,x] under (x,x) → [xx,x], never [x,xx]; a merged symbol can't
-  * cascade within its own round because `ab` is strictly longer than
-  * `a`). The fold compares WHOLE symbols — the `chr(1)`-anchored
-  * suffix test — where a flat-string `replace(repr, 'a␁b', 'ab')`
-  * would falsely match `a` as the tail of a longer symbol ([xa, b]
-  * must NOT fuse). Spark spells the fold `aggregate()`, DuckDB
-  * `list_reduce()`; it stays a pure map over the word table — no
-  * per-round shuffle. Pair selection breaks count ties by binary
-  * string order on both engines. Everything else is integer counts,
-  * so the whole trainer replays bit-for-bit in the oracle as `Rounds`
-  * chained CTE triples.
+  * The driver loop keeps Spark's string semantics: words split into
+  * CODE POINTS ([[codePoints]]), the unit of Spark's `length` and
+  * `substring`, and count ties break on the UTF-8 byte order of the
+  * `a␁b` pair string ([[utf8Order]]), Spark's binary string order —
+  * neither UTF-16 chars nor `String.compareTo`, which disagree with it
+  * past the Basic Multilingual Plane.
+  *
+  * Encoding stays in Spark, since it runs over corpora and inside
+  * streaming drains. A word's symbol segmentation is kept as the word
+  * with `chr(1)` separators (a character that cannot occur inside
+  * space-split words), and applying merge (a, b) is a per-word left fold
+  * over the symbols — merge when the accumulator's LAST symbol equals
+  * `a` and the incoming symbol equals `b`, which is exactly BPE's greedy
+  * left-to-right non-overlapping application ([x,x,x] under (x,x) →
+  * [xx,x], never [x,xx]; a merged symbol can't cascade within its own
+  * round because `ab` is strictly longer than `a`). The fold compares
+  * WHOLE symbols — the `chr(1)`-anchored suffix test — where a
+  * flat-string `replace(repr, 'a␁b', 'ab')` would falsely match `a` as
+  * the tail of a longer symbol ([xa, b] must NOT fuse). Spark spells the
+  * fold `aggregate()`, DuckDB `list_reduce()`, and the driver trainer
+  * [[mergeSyms]]. Everything is integer counts, so the whole trainer
+  * replays bit-for-bit in the oracle as `Rounds` chained CTE triples.
   */
 object BpeQueries {
   private val Rounds = 6
-
-  /** Re-materialize the word table every this-many merge rounds (eager
-    * `localCheckpoint`, the Components.scala discipline). Without it,
-    * round r's pair-count job re-evaluates r−1 CHAINED `aggregate` folds
-    * over the cached base table — O(R²) fold applications across the
-    * loop, with plan/codegen depth growing linearly in R. With it, a
-    * round re-evaluates at most `CheckpointEvery` folds past the last
-    * checkpoint, so total work is O(R·CheckpointEvery) — linear in the
-    * merge count — and the plan depth is bounded. Measured at sf0.001
-    * (local[4], warmed JVM): checkpointed runs 3.4 s at R = 16 and
-    * 8.8 s at R = 64 (per-round cost FLAT at ~0.14-0.21 s — pure
-    * driver-sequencing floor), while the unchecked lineage runs 2.5 s
-    * at R = 16 but 21.2 s at R = 64 — 8.5× the time for 4× the rounds,
-    * the quadratic fold re-evaluation in the data. BpeSpec pins
-    * merge-for-merge equality of the checkpointed and unchecked paths.
-    *
-    * PRACTICAL MERGE-COUNT BOUND: each round is still one Spark job
-    * (pair-count aggregation + 1-row argmax collect) sequenced from the
-    * driver — irreducible in BPE, whose round r depends on round r−1's
-    * choice. At a fixed per-round job-dispatch cost, a 32k-merge
-    * production vocabulary is hours of driver-sequenced jobs regardless
-    * of cluster size. This trainer is therefore sized for the declared
-    * `Rounds` and for corpus-specific auxiliary vocabularies (≲ 1k
-    * merges); a full production tokenizer train belongs in a
-    * single-node trainer over the (tiny, Heaps-law) word-type table
-    * this module already derives and can export.
-    */
-  private val CheckpointEvery = 4
   private val Sep = "\u0001" // the JVM twin of the in-SQL chr(1) separator
 
   /** Initial character segmentation of a `word` column — the chr(1)-
@@ -85,28 +61,35 @@ object BpeQueries {
        i -> substring(word, i, 1)))""".replace('\n', ' ')
 
   /** Vocabulary-sized training table: distinct words with corpus counts
-    * and the initial character segmentation.
+    * (word, cnt) — the input of both tokenizer trainers.
     */
-  private def wordTable(s: SparkSession, d: String): DataFrame =
+  private[graft] def wordTable(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy("word").agg(count(lit(1)).as("cnt"))
-      .withColumn("repr", expr(initReprSql))
 
-  /** Adjacent symbol pairs of the current segmentation, weighted by word
-    * frequency. `sequence(a, b)` DESCENDS when b < a, so single-symbol
-    * words are guarded to emit nothing instead of a reversed fan-out.
+  /** A word's code points, each as a string: Spark's character unit. */
+  private def codePoints(w: String): Vector[String] =
+    w.codePoints().toArray.iterator
+      .map(cp => new String(Character.toChars(cp))).toVector
+
+  /** Spark's string order: unsigned UTF-8 bytes. */
+  private[graft] val utf8Order: Ordering[String] = (a: String, b: String) =>
+    UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+
+  /** (count DESC, string UTF-8 ASC): the trainers' selection order. */
+  private[graft] val countDescThenUtf8: Ordering[(Long, String)] =
+    Ordering.Tuple2(Ordering.Long.reverse, utf8Order)
+
+  /** The word-type table collected to the driver in one Spark
+    * aggregation, each word split into code points. Bounded by
+    * `spark.driver.maxResultSize` (see the object doc).
     */
-  private def pairCounts(words: DataFrame): DataFrame =
-    words.select(col("cnt"), explode(expr(
-        """CASE WHEN size(split(repr, chr(1))) >= 2 THEN
-             transform(sequence(1, size(split(repr, chr(1))) - 1),
-               i -> concat(element_at(split(repr, chr(1)), i), chr(1),
-                           element_at(split(repr, chr(1)), i + 1)))
-           ELSE CAST(array() AS ARRAY<STRING>) END""".replace('\n', ' ')))
-        .as("pair"))
-      .groupBy("pair").agg(sum(col("cnt")).as("n"))
+  private[graft] def collectedWords(s: SparkSession,
+      d: String): Seq[(Vector[String], Long)] =
+    wordTable(s, d).collect().toSeq
+      .map(r => (codePoints(r.getString(0)), r.getLong(1)))
 
   /** Greedy left-to-right non-overlapping application of merge (a, b):
     * fold the symbol list, fusing when the accumulator's last symbol is
@@ -114,7 +97,7 @@ object BpeQueries {
     * of a LONGER symbol must not match) and the next symbol is `b`.
     * Fusing appends bare `b` (the last symbol `…␁a` becomes `…␁ab`);
     * otherwise the symbol arrives behind a separator. A pure map —
-    * merge rounds never shuffle the word table.
+    * encoding never shuffles the word table.
     */
   private def applyMerge(repr: Column, a: String, b: String): Column = {
     val syms = split(repr, Sep)
@@ -126,58 +109,53 @@ object BpeQueries {
         concat(acc, lit(b))).otherwise(concat(acc, lit(Sep), x)))
   }
 
-  /** The trainer loop shared by the merge-table query and the encoder:
-    * runs the rounds and returns BOTH the learned merges and the word
-    * table in its final segmentation (every chosen merge applied).
-    * Stops early if the pair supply is exhausted (degenerate corpora),
-    * so the merge count is `min(Rounds, available merges)`. The only
-    * driver state is one (pair, count) row per round.
+  /** [[applyMerge]]'s fold on a driver-side symbol list. */
+  private def mergeSyms(syms: Vector[String], a: String,
+      b: String): Vector[String] =
+    syms.foldLeft(Vector.empty[String]) { (acc, x) =>
+      if (x == b && acc.lastOption.contains(a)) acc.init :+ (a + b)
+      else acc :+ x
+    }
+
+  /** The trainer: `Rounds` rounds on the driver over the collected word
+    * table — count adjacent symbol pairs weighted by `cnt`, take the
+    * argmax by (n DESC, `a␁b` UTF-8 ASC), apply it with [[mergeSyms]].
+    * Stops early when no pair is left (degenerate corpora), so the merge
+    * count is `min(Rounds, available merges)`. Returns one
+    * (round, sym_a, sym_b, merged, n) row per merge.
     */
-  private[graft] def trainLoop(s: SparkSession, d: String,
-      rounds: Int = Rounds, checkpointEvery: Int = CheckpointEvery)
-      : (DataFrame, Seq[(Long, String, String, String, Long)]) = {
-    require(checkpointEvery >= 1, s"checkpointEvery: $checkpointEvery")
-    val w0 = wordTable(s, d)
-      .transform(graft.Caches.scoped)
-    var words = w0
-    var foldsSinceCkpt = 0
+  private[graft] def trainLoop(s: SparkSession, d: String)
+      : Seq[(Long, String, String, String, Long)] = {
+    var words = collectedWords(s, d)
     val merges = Seq.newBuilder[(Long, String, String, String, Long)]
     var r = 1
     var exhausted = false
-    while (r <= rounds && !exhausted) {
-      val best = pairCounts(words)
-        .orderBy(col("n").desc, col("pair")).limit(1).collect()
-      if (best.isEmpty) exhausted = true
+    while (r <= Rounds && !exhausted) {
+      val pairs = collection.mutable.HashMap.empty[(String, String), Long]
+      for ((syms, cnt) <- words; i <- 0 until syms.length - 1) {
+        val p = (syms(i), syms(i + 1))
+        pairs(p) = pairs.getOrElse(p, 0L) + cnt
+      }
+      if (pairs.isEmpty) exhausted = true
       else {
-        val pair = best.head.getAs[String]("pair")
-        val n = best.head.getAs[Long]("n")
-        val Array(a, b) = pair.split(Sep, 2)
+        val ((a, b), n) = pairs.minBy { case ((a, b), n) =>
+          (n, a + Sep + b) }(countDescThenUtf8)
         merges += ((r.toLong, a, b, a + b, n))
-        words = words.withColumn("repr", applyMerge(col("repr"), a, b))
-        foldsSinceCkpt += 1
-        // bound the chained-fold depth (see [[CheckpointEvery]]): the
-        // eager localCheckpoint truncates the logical plan, so the next
-        // round's pair count starts from materialized rows, not from a
-        // re-evaluation of every previous round's fold
-        if (foldsSinceCkpt >= checkpointEvery && r < rounds) {
-          words = graft.Caches.checkpointed(words)
-          foldsSinceCkpt = 0
-        }
+        words = words.map { case (syms, cnt) => (mergeSyms(syms, a, b), cnt) }
         r += 1
       }
     }
-    (words, merges.result())
+    merges.result()
   }
 
-  /** The learned merge table: one row per round — (round, sym_a, sym_b,
-    * merged, n), where n is the pair's weighted count when it was
-    * chosen.
+  /** The learned merge table: one row per round, in round order —
+    * (round, sym_a, sym_b, merged, n), where n is the pair's weighted
+    * count when it was chosen. A local relation: reading it runs no
+    * Spark job.
     */
   private[graft] def trainMerges(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    trainLoop(s, d)._2
-      .toDF("round", "sym_a", "sym_b", "merged", "n")
-      .orderBy("round")
+    trainLoop(s, d).toDF("round", "sym_a", "sym_b", "merged", "n")
   }
 
   /** Per-source BPE fertility under the trained merges — the metric
@@ -251,9 +229,9 @@ object BpeQueries {
   /** The serve-path encoder: re-derives the word table (one corpus
     * scan) and applies the PERSISTED merge table — ≤ `Rounds` rows
     * collected to the driver (constant-size state) and replayed as
-    * chained replaces in round order — skipping the trainer's
-    * per-round pair-count aggregations entirely. Row-identical to the
-    * self-contained path (BpeSpec + the shared oracle pin it).
+    * chained folds in round order — skipping the trainer's word-table
+    * collect. Row-identical to the self-contained path (BpeSpec + the
+    * shared oracle pin it).
     */
   private def encodedFromServe(s: SparkSession, d: String): DataFrame =
     encodeTypes(wordTable(s, d), servedMerges(s, d))
@@ -353,14 +331,15 @@ GROUP BY source ORDER BY source"""
 
     // ── Encode under the trained model: per-source subword fertility.
     "x92_bpe_fertility" -> QueryDef(
-      (s, d) => encodeFertility(s, d, trainLoop(s, d)._1),
+      (s, d) => encodeFertility(s, d, encodeTypes(wordTable(s, d),
+        trainLoop(s, d).map(m => (m._2, m._3)))),
       Some(fertilityOracle),
       "per-source fertility of the corpus encoded with the learned " +
         "BPE merges"),
 
     // ── Serve twin: replay the PERSISTED merge table (≤ Rounds rows of
-    //    constant driver state), skipping the trainer's per-round
-    //    pair-count jobs. Row-identical to x92 (shared oracle).
+    //    constant driver state), skipping the trainer's word-table
+    //    collect. Row-identical to x92 (shared oracle).
     "x92s_bpe_encode_serve" -> QueryDef(
       (s, d) => {
         AuditServe.prepare(s, d)

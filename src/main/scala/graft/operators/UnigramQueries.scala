@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.QueryDef
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,26 +30,27 @@ import org.apache.spark.sql.functions._
   * position).
   *
   * Scale shape (the x91 discipline): training runs on the
-  * vocabulary-sized word-TYPE table (Heaps' law), never the corpus;
-  * the candidate vocabulary is CONSTANT-size by construction
-  * ([[SeedSize]] + the alphabet) and lives as collected driver state
-  * between rounds (the BPE merge-table discipline), so the per-round
-  * E-step is a pure map over the word table against a literal
-  * piece→logp map and the M-step is one map-side-combined aggregation
-  * of the segmentations — one Spark job per round, constant driver
-  * state. [[EmRounds]] is driver-sequenced like BPE's
-  * merge rounds, but here rounds are a QUALITY knob (hard-EM converges
-  * in a few), not a vocabulary-size knob — the 32k-piece production
-  * case changes [[SeedSize]], not the round count, and every round's
-  * cost is independent of it.
+  * vocabulary-sized word-TYPE table (Heaps' law), never the corpus.
+  * Spark builds it in one aggregation and the driver collects it once
+  * ([[BpeQueries.collectedWords]], code points per word); the seed
+  * frequencies, the [[EmRounds]] Viterbi E-steps and the M-steps all
+  * run in plain Scala over those rows, with Spark's string semantics
+  * (code points, UTF-8 byte order via [[BpeQueries.utf8Order]]). The
+  * one size bound is `spark.driver.maxResultSize`: a word-type table
+  * past it fails the collect loudly, where the per-round-job loop this
+  * replaces ran slowly. Only the final segmentation runs in Spark, as
+  * [[segmentTypes]] — the same encode the serve and streaming twins
+  * use. Rounds are a QUALITY knob (hard-EM converges in a few), not a
+  * vocabulary-size knob — the 32k-piece production case changes
+  * [[SeedSize]], not the round count.
   */
 object UnigramQueries {
 
-  /** Longest candidate piece (characters). */
+  /** Longest candidate piece (code points). */
   private val MaxPiece = 4
 
   /** Seed vocabulary size: the top-N weighted substrings, UNIONed with
-    * every single character so any word stays segmentable (the
+    * every single code point so any word stays segmentable (the
     * coverage floor SentencePiece also enforces).
     */
   private val SeedSize = 24
@@ -66,42 +67,30 @@ object UnigramQueries {
 
   private val Sep = "\u0001" // the in-SQL chr(1), the x91 convention
 
-  /** Vocabulary-sized training table — the x91 word-type discipline. */
-  private def wordTable(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-      .select(explode(split(col("text"), " ")).as("word"))
-      .filter(length(col("word")) > 0)
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
+  private type Words = Seq[(Vector[String], Long)]
 
-  /** Frequency of every ≤ [[MaxPiece]]-char substring, weighted by word
-    * corpus count — the seed candidate pool.
+  /** Seed counts: the corpus-weighted frequency of every ≤ [[MaxPiece]]
+    * code-point substring; keeps the top [[SeedSize]] by (c DESC, piece
+    * UTF-8 ASC) plus every single code point.
     */
-  private def substrFreqs(wt: DataFrame): DataFrame =
-    wt.select(col("cnt"), explode(expr(s"""
-        flatten(transform(sequence(1, length(word)), i ->
-          transform(sequence(1, least($MaxPiece, length(word) - i + 1)),
-            l -> substring(word, i, l))))""".replace('\n', ' ')))
-        .as("piece"))
-      .groupBy("piece").agg(sum(col("cnt")).as("c"))
+  private def seedCounts(words: Words): Seq[(String, Long)] = {
+    val freq = collection.mutable.HashMap.empty[String, Long]
+    for ((cps, cnt) <- words; i <- cps.indices;
+         l <- 1 to math.min(MaxPiece, cps.length - i)) {
+      val p = cps.slice(i, i + l).mkString
+      freq(p) = freq.getOrElse(p, 0L) + cnt
+    }
+    val singles = words.flatMap(_._1).toSet
+    val top = freq.toSeq.sortBy { case (p, c) => (c, p) }(
+      BpeQueries.countDescThenUtf8).take(SeedSize)
+    (top ++ freq.filter { case (p, _) => singles(p) }).distinct
+  }
 
-  /** Seed selection: top [[SeedSize]] by (c DESC, piece) — a
-    * distributed TakeOrdered, not a global window — plus every single
-    * character (deduped; a char already in the top-N unions to the
-    * same (piece, c) row).
-    */
-  private def seedVocab(sub: DataFrame): DataFrame =
-    sub.orderBy(col("c").desc, col("piece")).limit(SeedSize)
-      .unionByName(sub.filter(length(col("piece")) === 1))
-      .distinct()
-
-  /** Fixed-point log-probabilities from collected (piece, count) rows
-    * — the M-step, computed on the DRIVER over constant-size state
-    * (≤ [[SeedSize]] + alphabet rows, the BPE collected-merge-table
-    * discipline): `floor(ln(c/t)·10⁶ + 0.5)` per piece, ONE
+  /** Fixed-point log-probabilities from (piece, count) rows — the
+    * M-step, on the DRIVER: `floor(ln(c/t)·10⁶ + 0.5)` per piece, ONE
     * `Math.log` from exact-integer inputs — the same libm surface the
     * in-plan `ln` would use (Spark's Log expression is the identical
-    * JVM call), so the oracle parity argument is unchanged while the
-    * per-round broadcast-exchange jobs disappear.
+    * JVM call), so the oracle parity argument holds.
     */
   private def vocabOf(counts: Seq[(String, Long)])
       : Seq[(String, Long, Long)] = {
@@ -110,6 +99,43 @@ object UnigramQueries {
       (p, c, math.floor(
         math.log(c.toDouble / t.toDouble) * 1e6 + 0.5).toLong)
     }
+  }
+
+  /** [[dpExpr]]'s Viterbi DP on one word's code points under the
+    * piece→lp map: the best (score, piece-count, segmentation) per
+    * prefix, ties broken score DESC, piece-count ASC, segmentation UTF-8
+    * ASC. Returns the chr(1)-joined segmentation, or "" when no piece
+    * chain spans the word (the SQL fold's NULL-score state).
+    */
+  private def viterbi(cps: Vector[String], lp: Map[String, Long]): String = {
+    val best = new Array[(Long, Int, String)](cps.length + 1)
+    best(0) = (0L, 0, "")
+    for (j <- 1 to cps.length; i <- math.max(0, j - MaxPiece) until j
+         if best(i) != null) {
+      val piece = cps.slice(i, j).mkString
+      lp.get(piece).foreach { l =>
+        val (sc, np, r) = best(i)
+        val x = (sc + l, np + 1, if (r.isEmpty) piece else r + Sep + piece)
+        val b = best(j)
+        if (b == null || x._1 > b._1 || (x._1 == b._1 && (x._2 < b._2 ||
+            (x._2 == b._2 && BpeQueries.utf8Order.lt(x._3, b._3)))))
+          best(j) = x
+      }
+    }
+    Option(best(cps.length)).fold("")(_._3)
+  }
+
+  /** M-step counts: corpus-weighted piece usage in the E-step's
+    * segmentation. Pieces that won nowhere simply don't appear — the
+    * prune.
+    */
+  private def pieceCounts(words: Words,
+      vocab: Seq[(String, Long, Long)]): Seq[(String, Long)] = {
+    val lp = vocab.map { case (p, _, l) => p -> l }.toMap
+    val c = collection.mutable.HashMap.empty[String, Long]
+    for ((cps, cnt) <- words; p <- viterbi(cps, lp).split(Sep, -1))
+      c(p) = c.getOrElse(p, 0L) + cnt
+    c.toSeq
   }
 
   /** The Viterbi DP as ONE whole-stage-codegen fold per word: state j
@@ -149,8 +175,8 @@ object UnigramQueries {
   /** Segment any frame carrying a `word` column under a piece
     * vocabulary — a pure map against a LITERAL piece→lp map column
     * (built with Column lits, no string escaping surface), no shuffle
-    * and no broadcast-exchange job. Shared by the trainer's E-step,
-    * the serve encode, and the streaming drain (st21).
+    * and no broadcast-exchange job. Shared by the trainer's final
+    * encode, the serve encode, and the streaming drain (st21).
     */
   private[graft] def segmentTypes(words: DataFrame,
       vocab: Seq[(String, Long, Long)]): DataFrame =
@@ -160,54 +186,39 @@ object UnigramQueries {
       .withColumn("repr", expr(dpExpr))
       .drop("vm")
 
-  /** The trainer's E-step over the weighted word-type table. */
+  /** The weighted word-type table segmented under `vocab`. */
   private def segment(wt: DataFrame,
       vocab: Seq[(String, Long, Long)]): DataFrame =
     segmentTypes(wt, vocab).select(col("word"), col("cnt"), col("repr"))
-
-  /** M-step counts: corpus-weighted piece usage in the segmentation —
-    * one map-side-combined aggregation collapsing to ≤ vocabulary-size
-    * rows, collected as the round's driver state. Pieces that won
-    * nowhere simply don't appear — the prune.
-    */
-  private def stepCounts(seg: DataFrame): Seq[(String, Long)] =
-    seg.select(col("cnt"), explode(split(col("repr"), Sep)).as("piece"))
-      .groupBy("piece").agg(sum(col("cnt")).as("c"))
-      .collect()
-      .map(r => (r.getAs[String]("piece"), r.getAs[Long]("c")))
-      .toSeq
 
   /** Run the trainer; returns (final vocabulary, the corpus segmented
     * UNDER that final vocabulary) — the vocabulary is the model file
     * analog, and the segmentation is what shipping the model produces
     * (one more E-step past the last M-step — the encode a production
     * pipeline runs, so the self-contained x98 and the served x98s are
-    * row-identical by construction). Per round: ONE aggregation job
-    * whose result is constant-size driver state (the BPE trainer's
-    * shape — here ≤ SeedSize + alphabet rows instead of one argmax
-    * row).
+    * row-identical by construction). Seed and rounds run on the driver
+    * over the word table collected once; the returned segmentation is
+    * the Spark [[segmentTypes]] encode.
     */
   private[graft] def trainLoop(s: SparkSession, d: String)
       : (Seq[(String, Long, Long)], DataFrame) = {
-    val wt = wordTable(s, d).transform(graft.Caches.scoped)
-    var vocab = vocabOf(
-      seedVocab(substrFreqs(wt)).select(col("piece"), col("c"))
-        .collect()
-        .map(r => (r.getAs[String]("piece"), r.getAs[Long]("c")))
-        .toSeq)
+    val words = BpeQueries.collectedWords(s, d)
+    var vocab = vocabOf(seedCounts(words))
     for (_ <- 1 to EmRounds)
-      vocab = vocabOf(stepCounts(segment(wt, vocab)))
-    (vocab, segment(wt, vocab))
+      vocab = vocabOf(pieceCounts(words, vocab))
+    (vocab, segment(BpeQueries.wordTable(s, d), vocab))
   }
 
-  /** The trained piece table as a frame — x97's output and the
-    * artifact [[AuditServe.prepare]] persists (the tokenizer model
-    * file, the `bpemerges` sibling).
+  /** The trained piece table as a frame, ordered (cnt DESC, piece
+    * UTF-8 ASC) — x97's output and the artifact [[AuditServe.prepare]]
+    * persists (the tokenizer model file, the `bpemerges` sibling). A
+    * local relation: reading it runs no Spark job.
     */
   private[graft] def pieceTable(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    trainLoop(s, d)._1.toDF("piece", "cnt", "lp_micro")
-      .orderBy(col("cnt").desc, col("piece"))
+    trainLoop(s, d)._1
+      .sortBy { case (p, c, _) => (c, p) }(BpeQueries.countDescThenUtf8)
+      .toDF("piece", "cnt", "lp_micro")
   }
 
   /** The persisted piece table as collected driver state (≤ vocab
@@ -225,7 +236,7 @@ object UnigramQueries {
     */
   private[graft] def encodedFromServe(s: SparkSession,
       d: String): DataFrame =
-    segment(wordTable(s, d), servedPieces(s, d))
+    segment(BpeQueries.wordTable(s, d), servedPieces(s, d))
 
   // ── oracle generation: the same trainer as chained MATERIALIZED
   // CTEs (inlining would re-expand each DP level's double reference).

@@ -5,31 +5,10 @@ import graft.operators.BpeQueries
 /** Hand-computed pins for the BPE merge trainer that the DuckDB oracle
   * cannot express on driver data alone: frequency-weighted selection,
   * left-to-right non-overlapping merge application, binary-order tie
-  * breaking, merged-symbol reuse in later rounds, and early stop when the
-  * pair supply runs dry.
+  * breaking, merged-symbol reuse in later rounds, early stop when the
+  * pair supply runs dry, code-point symbols, and the trainer's job count.
   */
 class BpeSpec extends SparkSpec {
-  import spark.implicits._
-
-  private def corpusDir(texts: String*): String = {
-    val d = java.nio.file.Files.createTempDirectory("bpe").toString
-    // testdata layout is one parquet FILE per table (not a directory):
-    // the st19 file-stream source globs on the leaf name, so the fixture
-    // must match that shape or the stream silently reads nothing
-    val stage = s"$d/_stage"
-    texts.zipWithIndex
-      .map { case (t, i) => (i.toLong, t, "en", "src0") }
-      .toDF("doc_id", "text", "lang", "source")
-      .withColumn("n_chars",
-        org.apache.spark.sql.functions.length(
-          org.apache.spark.sql.functions.col("text")).cast("long"))
-      .coalesce(1).write.mode("overwrite").parquet(stage)
-    val part = new java.io.File(stage).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    java.nio.file.Files.move(part.toPath,
-      java.nio.file.Paths.get(s"$d/documents.parquet"))
-    d
-  }
 
   private def merges(dir: String): Seq[(Long, String, String, String, Long)] =
     BpeQueries.trainMerges(spark, dir).collect()
@@ -131,18 +110,48 @@ class BpeSpec extends SparkSpec {
 
   test("property: the engine matches the textbook trainer on a " +
       "seeded random corpus") {
-    val rnd = new scala.util.Random(42)
-    val words = Vector.fill(40) {
-      (1 to (1 + rnd.nextInt(6))).map(_ => "abc" (rnd.nextInt(3))).mkString
+    // two seeded corpora at the declared 6 rounds: repeated words over
+    // "abc", and distinct 2-6 letter words over "abcd"
+    val abc = {
+      val rnd = new scala.util.Random(42)
+      val words = Vector.fill(40) {
+        (1 to (1 + rnd.nextInt(6))).map(_ => "abc" (rnd.nextInt(3))).mkString
+      }
+      Vector.fill(3) {
+        Vector.fill(30)(words(rnd.nextInt(words.length))).mkString(" ")
+      }
     }
-    val docs = Vector.fill(3) {
-      Vector.fill(30)(words(rnd.nextInt(words.length))).mkString(" ")
+    val abcd = {
+      val rnd = new scala.util.Random(7)
+      Vector.fill(3)(Vector.fill(40)(
+        (1 to (2 + rnd.nextInt(5))).map(_ => "abcd" (rnd.nextInt(4)))
+          .mkString).mkString(" "))
     }
-    val counts = docs.flatMap(_.split(" ")).filter(_.nonEmpty)
-      .groupBy(identity).map { case (w, g) => (w, g.size.toLong) }
-    val m = merges(corpusDir(docs: _*))
+    for (docs <- Seq(abc, abcd)) {
+      val counts = docs.flatMap(_.split(" ")).filter(_.nonEmpty)
+        .groupBy(identity).map { case (w, g) => (w, g.size.toLong) }
+      val m = merges(corpusDir(docs: _*))
+      spark.catalog.clearCache()
+      assert(m == refTrain(counts, 6),
+        s"engine $m vs ref ${refTrain(counts, 6)}")
+    }
+  }
+
+  test("symbols are code points and count ties break on UTF-8 byte " +
+      "order, Spark's string order") {
+    // 𝔘 (U+1D518) is a UTF-16 surrogate pair that String.compareTo puts
+    // before ｡ (U+FF61); in UTF-8 bytes ｡ (EF…) comes first (F0…)
+    val m = merges(corpusDir("𝔘a ｡a"))
     spark.catalog.clearCache()
-    assert(m == refTrain(counts, 6), s"engine $m vs ref ${refTrain(counts, 6)}")
+    assert(m == Seq(
+      (1L, "｡", "a", "｡a", 1L),
+      (2L, "𝔘", "a", "𝔘a", 1L)), m.toString)
+  }
+
+  test("training launches at most 2 Spark jobs: one word-table collect") {
+    val jobs = jobStages(BpeQueries.trainMerges(spark, sf).collect())
+    spark.catalog.clearCache()
+    assert(jobs.size <= 2, s"${jobs.size} jobs: $jobs")
   }
 
   test("the serve row answers from the persisted merge table with " +
@@ -155,27 +164,6 @@ class BpeSpec extends SparkSpec {
     spark.catalog.clearCache()
     assert(self == served, s"self $self vs served $served")
     assert(self.nonEmpty)
-  }
-
-  test("checkpointed and unchecked lineage paths train identical merges " +
-      "(the CheckpointEvery discipline changes cost, never results)") {
-    // 16 rounds over a corpus with ≥ 16 distinct pairs, so the loop
-    // crosses several checkpoint boundaries; checkpointEvery=1 (most
-    // aggressive truncation) must equal checkpointEvery=1000 (never
-    // truncates — the pre-fix lineage shape)
-    val rnd = new scala.util.Random(7)
-    val docs = Vector.fill(3)(Vector.fill(40)(
-      (1 to (2 + rnd.nextInt(5))).map(_ => "abcd" (rnd.nextInt(4)))
-        .mkString).mkString(" "))
-    val dir = corpusDir(docs: _*)
-    def trained(every: Int) =
-      BpeQueries.trainLoop(spark, dir, rounds = 16,
-        checkpointEvery = every)._2
-    val ckpt = trained(1)
-    val plain = trained(1000)
-    spark.catalog.clearCache()
-    assert(ckpt == plain, s"ckpt $ckpt vs plain $plain")
-    assert(ckpt.length == 16, s"expected 16 merges, got ${ckpt.length}")
   }
 
   test("the streaming twin's drained word-count state yields the batch " +

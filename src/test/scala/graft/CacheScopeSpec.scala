@@ -21,7 +21,7 @@ class CacheScopeSpec extends SparkSpec {
     "x06_dedup_minhash_lsh",  // DedupQueries: lshSigs/bands persists
     "x08_ngram_jaccard",      // DedupQueries: shingle df persists
     "x14_dedup_clusters",     // Components BSP: persists + checkpoints
-    "x14s_clusters_serve",    // AuditServe prepare: BSP + BPE checkpoints
+    "x14s_clusters_serve",    // AuditServe prepare: BSP checkpoints
     "x42_cluster_canonical",  // Components BSP over LSH candidates
     "x12_ann_ivf_search",     // SimilarityQueries: corpus/centroids/assignment
     "x41_embed_dedup_clusters", // bucket-local union-find chain
@@ -32,9 +32,9 @@ class CacheScopeSpec extends SparkSpec {
     "x61_label_communities",  // label rounds + lazy node checkpoint
     "x61s_communities_serve", // GraphServe prepare + label rounds
     "x65_bm25_rank",          // PipelineQueries persists
-    "x91_bpe_train",          // BpeQueries: word table + checkpoints
+    "x91_bpe_train",          // BpeQueries: driver-side trainer
     "x92_bpe_fertility",      // BPE training under the fertility audit
-    "x97_unigram_train",      // UnigramQueries: word-table persist
+    "x97_unigram_train",      // UnigramQueries: driver-side trainer
     "x99_ivf_coarse_route",   // two-level router: fine + coarse persists
     "x46s_pagerank_serve",    // GraphServe transition persist + rounds
     "x65s_bm25_serve",        // postings persist

@@ -10,22 +10,8 @@ import java.security.MessageDigest
   * sketch) that makes the state streamable.
   */
 class CmsSpec extends SparkSpec {
-  import spark.implicits._
-
   private val D = 4
   private val W = 256
-
-  private def corpusDir(texts: String*): String = {
-    val d = java.nio.file.Files.createTempDirectory("cms").toString
-    texts.zipWithIndex
-      .map { case (t, i) => (i.toLong, t, "en", "src0") }
-      .toDF("doc_id", "text", "lang", "source")
-      .withColumn("n_chars",
-        org.apache.spark.sql.functions.length(
-          org.apache.spark.sql.functions.col("text")).cast("long"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
-    d
-  }
 
   /** The engines' shared hash: first 15 md5 hex digits as a positive
     * long, mod W.

@@ -15,11 +15,10 @@ package graft
   *     isolation every streaming drain applied a fresh one, so st01
   *     re-Janino'd its full 14 units per run at ANY cache size.
   *
-  * Rows span the codegen-heaviest families: x92 (BPE trainer loop —
-  * 45 units per run at the default cache), x73 (native
-  * TypedImperativeAggregate), x36 (token LM), e12 (distributed
-  * ranks), x05 (hash dedup), st01/st12 (streaming drains — their
-  * per-run unique sink names must stay out of generated source, and
+  * Rows span the codegen-heaviest families: x92 (BPE encode folds),
+  * x73 (native TypedImperativeAggregate), x36 (token LM), e12
+  * (distributed ranks), x05 (hash dedup), st01/st12 (streaming
+  * drains — their per-run unique sink names must stay out of generated source, and
   * their micro-batch classloader must stay THE classloader).
   *
   * Measured with AQE DISABLED for the duration of the test: adaptive

@@ -7,30 +7,6 @@ package graft
   */
 class IvfIndexSpec extends SparkSpec {
 
-  /** One entry per Spark job `body` starts: its stage names, which carry
-    * the call site (`count at …`; stages that adaptive execution submits
-    * from its own thread pool read `… at CompletableFuture.java`). The
-    * job's `callSite.short` property is unset unless code calls
-    * `setCallSite`, so it cannot tell jobs apart. The listener bus is
-    * async, so it is drained before reading, not slept on (a loaded host
-    * can outlast a fixed pause).
-    */
-  private def jobStages(body: => Unit): Seq[String] = {
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        stages.add(j.stageInfos.map(_.name).distinct.mkString(", "))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.ListenerBusDrain.waitUntilEmpty(
-        spark.sparkContext, 30000L)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    stages.toArray(Array.empty[String]).toSeq
-  }
-
   test("searchIndex over a built index equals the self-contained x12") {
     val idx = java.nio.file.Files.createTempDirectory("ivf").toString
     operators.SimilarityQueries.buildIndex(spark, sf, idx)

@@ -7,19 +7,6 @@ package graft
   * seeded random corpus.
   */
 class KneserNeySpec extends SparkSpec {
-  import spark.implicits._
-
-  private def corpusDir(texts: String*): String = {
-    val d = java.nio.file.Files.createTempDirectory("kn").toString
-    texts.zipWithIndex
-      .map { case (t, i) => (i.toLong, t, "en", "src0") }
-      .toDF("doc_id", "text", "lang", "source")
-      .withColumn("n_chars",
-        org.apache.spark.sql.functions.length(
-          org.apache.spark.sql.functions.col("text")).cast("long"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
-    d
-  }
 
   /** Count tables of the KN model over (doc, text) rows — plain Scala,
     * mirroring the engine's `split(text, ' ')` semantics (trailing

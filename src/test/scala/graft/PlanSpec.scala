@@ -212,9 +212,9 @@ class PlanSpec extends SparkSpec {
   test("x97: each E-step is a pure map over the word-type table — " +
       "exchanges only under the word/piece aggregations, none under " +
       "the Viterbi fold") {
-    // the trainer's plan: corpus scan → word groupBy (1 exchange) plus
-    // the final vocab is LOCAL rows (driver M-step), so the x97 frame
-    // itself is a LocalTableScan — zero exchanges, zero scans
+    // the trainer runs on the driver over the collected word table, so
+    // the x97 frame itself is a LocalTableScan — zero exchanges, zero
+    // scans
     val qe = q("x97_unigram_train").queryExecution
     val plan = qe.sparkPlan.toString
     assert(plan.contains("LocalTableScan"), plan.take(800))

@@ -13,7 +13,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning, RoundRobinPartitioning, SinglePartition}
 import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -32,9 +32,10 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *   - `stages`: the summary plus one line per completed stage (tasks,
   *     stage wall, summed executor run time) — separates few serial
   *     tasks from many tiny ones from dispatch gaps between stages.
-  *   - `plan`: the `explain("formatted")` text under a `===== q =====`
-  *     header (the format of the `plans/r*` before/after dumps), then a
-  *     join/exchange node-count line.
+  *   - `plan`: runs the query (`collect()`), then prints its
+  *     `explain("formatted")` text under a `===== q =====` header (the
+  *     format of the `plans/` before/after dumps), then a join/exchange
+  *     node-count line.
   *   - `scale`: writes the [[ScaleGen]] data at each size multiplier
   *     under `genRoot/x<m>`, then measures each query in its own fresh
   *     session (SCALE.md round 11: a shared session's old-gen pressure
@@ -405,14 +406,19 @@ object Probe {
       ("rows" -> JObject(rows.map(s => s.query -> (row(s): JValue)).toList))))
   }
 
-  /** The formatted plan and node counts per (query, dir); runs no action
-    * beyond what each builder runs itself.
+  /** The formatted plan and node counts per (query, dir), read after a
+    * `collect()` of the frame: every query stage has run, so the text is
+    * the adaptive final plan whether or not the builder ran jobs of its
+    * own (a plan read before any action shows a cached input's final
+    * plan only when a builder job already filled it).
     */
   def plans(spark: SparkSession, names: Seq[String],
       dirs: Seq[String]): Seq[Plan] =
     for (n <- names; d <- dirs) yield
       Try(scoped(spark) {
-        val qe = SparkEntry.queries(n)(spark, d).queryExecution
+        val df = SparkEntry.queries(n)(spark, d)
+        df.collect()
+        val qe = df.queryExecution
         Plan(n, d, qe.explainString(ExplainMode.fromString("formatted")),
           nodeCounts(qe.executedPlan))
       }).recover { case e => Plan(n, d, s"[probe] $n failed: ${message(e)}", Nil) }
@@ -424,7 +430,7 @@ object Probe {
     "otherExchange", "BroadcastExchange", "Window")
 
   /** Join, exchange and window operators in `plan`, counting inside AQE
-    * wrappers, subqueries and cached relations — each cached relation
+    * wrappers and query stages, subqueries and cached relations — each cached relation
     * once, however often it is scanned, as it is computed once. Reused
     * exchanges are not new shuffles and are not counted.
     */
@@ -433,6 +439,7 @@ object Probe {
       new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
     def all(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
       case s: InMemoryTableScanExec =>
         Seq(s.relation.cachedPlan).filter(cached.add)
       case _ => p.children ++ p.subqueries

@@ -30,6 +30,8 @@ class ProbeSpec extends SparkSpec {
   test("plan: formatted explain text, then a node-count line") {
     val Seq(p) = Probe.plans(spark, Seq("j01_inner_join"), Seq(sf))
     assert(p.text.startsWith("== Physical Plan =="), p.text.take(200))
+    // read after the query ran: the adaptive plan is the final one
+    assert(p.text.contains("isFinalPlan=true"), p.text.take(200))
     val line = """\[nodes\] (\S+) (\S+)((?: \w+=\d+)+)""".r
     p.nodeLine match {
       case line(q, d, kvs) =>

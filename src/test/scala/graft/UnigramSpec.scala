@@ -4,8 +4,9 @@ package graft
   * JVM hard-EM replay (imperative spelling vs the engine's SQL folds),
   * plus the contract invariants the oracle hash can't articulate —
   * coverage (every segmentation concatenates back to its word), the
-  * prune (only used pieces survive), and non-triviality (multi-char
-  * pieces beat the single-character floor somewhere).
+  * prune (only used pieces survive), non-triviality (multi-char
+  * pieces beat the single-character floor somewhere), code-point pieces
+  * past the Basic Multilingual Plane, and the trainer's job count.
   */
 class UnigramSpec extends SparkSpec {
 
@@ -117,5 +118,36 @@ class UnigramSpec extends SparkSpec {
     assert(SparkEntry.queries("x98_unigram_fertility")(spark, sf)
       .columns.sameElements(x92cols),
       "x98 must stay column-compatible with x92 for direct comparison")
+  }
+
+  test("a supplementary-plane word trains whole code-point pieces, " +
+      "covers its words, and serves the self-contained rows") {
+    val dir = corpusDir("𝔘𝔘a 𝔘a ｡a ab", "a𝔘𝔘 𝔘a b ｡｡")
+    val pieces = SparkEntry.queries("x97_unigram_train")(spark, dir)
+      .collect().map(_.getAs[String]("piece")).toSeq
+    assert(pieces.exists(_.contains("𝔘")), pieces)
+    pieces.foreach(p => assert(p.nonEmpty && p.codePoints().toArray
+      .forall(Character.getType(_) != Character.SURROGATE),
+      s"piece '$p' splits a code point"))
+    val seg = operators.UnigramQueries.trainLoop(spark, dir)._2
+      .collect().map(r => r.getAs[String]("word") -> r.getAs[String]("repr"))
+    assert(seg.nonEmpty)
+    for ((w, r) <- seg) {
+      assert(r.split(Sep).mkString == w, s"coverage broken for '$w'")
+      r.split(Sep).foreach(p => assert(pieces.contains(p), s"pruned $p"))
+    }
+    def rows(name: String) = SparkEntry.queries(name)(spark, dir)
+      .collect().map(_.toSeq).toSeq
+    val self = rows("x98_unigram_fertility")
+    val served = rows("x98s_unigram_serve")
+    spark.catalog.clearCache()
+    assert(self == served, s"self $self vs served $served")
+  }
+
+  test("training launches at most 2 Spark jobs: one word-table collect") {
+    val jobs = jobStages(
+      operators.UnigramQueries.pieceTable(spark, sf).collect())
+    spark.catalog.clearCache()
+    assert(jobs.size <= 2, s"${jobs.size} jobs: $jobs")
   }
 }

@@ -11,22 +11,8 @@ import java.security.MessageDigest
   * carries the whole selection.
   */
 class WinnowingSpec extends SparkSpec {
-  import spark.implicits._
-
   private val K = 5 // gram length (tokens)
   private val W = 4 // winnowing window (grams)
-
-  private def corpusDir(texts: String*): String = {
-    val d = java.nio.file.Files.createTempDirectory("winnow").toString
-    texts.zipWithIndex
-      .map { case (t, i) => (i.toLong, t, "en", "src0") }
-      .toDF("doc_id", "text", "lang", "source")
-      .withColumn("n_chars",
-        org.apache.spark.sql.functions.length(
-          org.apache.spark.sql.functions.col("text")).cast("long"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
-    d
-  }
 
   private def md5hex(s: String): String =
     MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
