@@ -40,19 +40,6 @@ object GraphQueries {
   /** Fixed-point scale for ranks: 1e12 per unit of probability mass. */
   private val PrScale = 1000000000000L
 
-  /** Node count above which the iterative rounds stop broadcasting the
-    * per-node state table (rank / label) and instead pre-partition the
-    * edge table on `src` once, so each round exchanges ONLY the
-    * node-sized state. A (bigint, bigint) state row costs ~50 bytes in a
-    * broadcast hash relation, so 4M nodes ≈ 200 MB per round-broadcast
-    * plus a driver collect of every node's state — past this the
-    * broadcast is the bottleneck AND an OOM risk, while the one-time
-    * edge repartition amortizes over all rounds. Both paths compute
-    * identical per-round states (GraphFlipSpec pins this); the flip is
-    * automatic because `n` is already measured before round 1.
-    */
-  private[graft] val BroadcastNodeLimit = 4000000L
-
   /** Per-order distinct part sets `(ok, pks)` from lineitem. */
   private def orderSets(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d)
@@ -123,23 +110,27 @@ e AS (
     * `(rank * w) div wout` per edge, then sum — so both engines
     * aggregate exactly the same integers regardless of their float
     * libms or sum orders.
+    *
+    * Scale bound: every round broadcasts the per-node state table (and
+    * the transition build broadcasts the per-node `wout` table). A
+    * (bigint, bigint) state row costs ~50 bytes in a broadcast hash
+    * relation, so 4M nodes is ~200 MB per round. There is no second
+    * round path: a state table past Spark's broadcast limits
+    * (`spark.driver.maxResultSize`, or the 8 GB broadcast cap) fails
+    * the query loudly. TPC-H has 200,000 × SF parts, 20k at sf0.1.
     */
-  def partPagerank(s: SparkSession, d: String): DataFrame =
-    partPagerank(s, d, BroadcastNodeLimit)
-
-  private[graft] def partPagerank(s: SparkSession, d: String,
-      flipAt: Long): DataFrame = {
-    val (ew, nodes, n, useBroadcast) = transitionTable(s, d, flipAt)
-    pagerankFrom(ew, nodes, n, useBroadcast)
+  def partPagerank(s: SparkSession, d: String): DataFrame = {
+    val (ew, nodes, n) = transitionTable(s, d)
+    pagerankFrom(ew, nodes, n)
   }
 
   /** The PageRank PREPARATION half — co-purchase transition table
-    * (src, dst, w, wout), node table, node count, and the flip verdict
-    * — factored so the self-contained x46 and the [[GraphServe]]
-    * artifact build share one spelling.
+    * (src, dst, w, wout), node table and node count — factored so the
+    * self-contained x46 and the [[GraphServe]] artifact build share one
+    * spelling.
     */
-  private[graft] def transitionTable(s: SparkSession, d: String,
-      flipAt: Long): (DataFrame, DataFrame, Long, Boolean) = {
+  private[graft] def transitionTable(s: SparkSession,
+      d: String): (DataFrame, DataFrame, Long) = {
     // wout comes from the per-order sets, NOT from a second pass over the
     // edge list: Σ_dst w(src,dst) counts (order, dst) co-occurrences, so
     // wout(src) = Σ_{orders ∋ src} (|pks| − 1) — one cheap aggregation on
@@ -150,59 +141,36 @@ e AS (
     // transition table is edge-sized and persisted — every PageRank
     // round scans IT directly.
     val sets = orderSets(s, d).transform(graft.Caches.scoped)
-    // persisted: the flip-decision count below materializes this one
-    // explode+agg pass and the transition build then reads the cache —
-    // the decision costs a count over |nodes| cached rows, not a second
-    // aggregation of the corpus
+    // persisted: the node count below materializes this one explode+agg
+    // pass, and the transition build and the node table then read the
+    // cache instead of aggregating the corpus again
     val wout = sets
       .select(explode(col("pks")).as("src"),
         (size(col("pks")) - 1).cast("bigint").as("k"))
       .groupBy("src").agg(sum(col("k")).as("wout"))
       .transform(graft.Caches.scoped)
-    // AUTOMATIC broadcast→shuffle flip, decided BEFORE the transition
-    // table is built so the |nodes|-row wout hint flips along with the
-    // per-round rank hint. wout.count() bounds |nodes| from above (a
-    // node with edges always has wout > 0). Below the limit each round broadcasts
-    // the rank table (AQE can't see through the lazily nested round
-    // plans to pick this on its own: measured 6.9 s for 3 shuffle-join
-    // rounds vs ~2 s broadcast at sf0.1). Past the limit a
-    // round-broadcast would collect every node's rank to the driver
-    // every round — so the transition table is built with a plain
-    // src-keyed shuffle join, whose OUTPUT is already hash-partitioned
-    // on src; the persisted cache keeps that partitioning, and each
-    // round exchanges only the node-sized rank table against it. Both
-    // paths compute identical integer states (GraphFlipSpec).
-    // ONE pass over the cached wout frame yields both driver scalars:
-    // the flip bound (total wout rows ≥ |nodes|) and n itself
-    // (wout > 0 rows — a part has an out-edge iff some order pairs it
-    // with another part iff wout > 0, so that filter IS the oracle's
-    // SELECT DISTINCT src FROM ew). Folding them saves a per-run job
-    // vs counting twice; at this query's size driver-job dispatch is a
-    // measurable slice of the total.
-    val scal = wout.agg(count(lit(1)).as("rows"),
-      count(when(col("wout") > 0, 1)).as("n")).head()
-    val useBroadcast = scal.getLong(0) < flipAt
-    val n = scal.getLong(1)
+    // n is the oracle's SELECT DISTINCT src FROM ew: a part has an
+    // out-edge iff some order pairs it with another part iff wout > 0.
+    // It lands on the driver before round 1, so the plan's uniform base
+    // rank is a LITERAL — exactly what the oracle's scalar subquery
+    // evaluates to.
+    val n = wout.agg(count(when(col("wout") > 0, 1))).head().getLong(0)
     val ew = pairsFrom(sets)
-      .join(if (useBroadcast) broadcast(wout) else wout, Seq("src"))
+      .join(broadcast(wout), Seq("src"))
       .transform(graft.Caches.scoped)
     // node table derived from the CACHED |nodes|-row wout frame, not a
-    // distinct over the 2.4M-row edge cache. Materialized once
-    // (localCheckpoint truncates the lineage under the rounds); n
-    // already landed above, so the plan's uniform base rank is a
-    // LITERAL — exactly what the oracle's scalar subquery evaluates to.
+    // distinct over the 2.4M-row edge cache
     val nodes = wout.filter(col("wout") > 0)
       .select(col("src").as("node"))
-      .transform(graft.Caches.checkpointed(_))
-    (ew, nodes, n, useBroadcast)
+    (ew, nodes, n)
   }
 
   /** The PageRank ROUND half over a prepared (transition, nodes, n)
     * triple — shared by the self-contained x46 and the serve row
     * reading the persisted artifacts.
     */
-  private def pagerankFrom(ew: DataFrame, nodes: DataFrame, n: Long,
-      useBroadcast: Boolean): DataFrame = {
+  private def pagerankFrom(ew: DataFrame, nodes: DataFrame,
+      n: Long): DataFrame = {
     // degenerate graph (no multi-item order anywhere → no edges, n = 0):
     // the uniform base rank would be `div 0` — ANSI throws — and the
     // oracle's scalar subquery would divide by zero too. An empty graph
@@ -220,10 +188,12 @@ e AS (
       // chain, and lineage stays constant-depth. The last round flows
       // straight into the one downstream consumer (TakeOrdered), so
       // checkpointing it would only add a materialization job. On a
-      // cluster, swap for reliable checkpoints as in Components.
-      val rsrc = rank.withColumnRenamed("node", "src")
+      // cluster, swap for reliable checkpoints as in Components. The
+      // explicit hint: AQE can't see through the lazily nested round
+      // plans to broadcast on its own (measured 6.9 s for 3 shuffle-join
+      // rounds vs ~2 s broadcast at sf0.1).
       val next = ew
-        .join(if (useBroadcast) broadcast(rsrc) else rsrc, Seq("src"))
+        .join(broadcast(rank.withColumnRenamed("node", "src")), Seq("src"))
         .select(col("dst").as("node"),
           expr("(rank * w) div wout").as("c"))
         .groupBy("node").agg(sum(col("c")).as("contrib"))
@@ -293,12 +263,7 @@ LIMIT 100"""
     * window — label state is one row per node, so rounds scale with the
     * edge list, never node² (the x14 Components argument).
     */
-  def labelPropagation(s: SparkSession, d: String): DataFrame =
-    labelPropagation(s, d, BroadcastNodeLimit)
-
-  private[graft] def labelPropagation(s: SparkSession, d: String,
-      flipAt: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  def labelPropagation(s: SparkSession, d: String): DataFrame = {
     val sets = orderSets(s, d).transform(graft.Caches.scoped)
     val edges = pairsFrom(sets)
       .transform(graft.Caches.scoped)
@@ -309,14 +274,7 @@ LIMIT 100"""
     // instead of the 2.4M-row pair table
     val nodes = sets.filter(size(col("pks")) >= 2)
       .select(explode(col("pks")).as("node")).distinct()
-      .transform(graft.Caches.checkpointed(_, eager = false))
-    // same automatic flip as partPagerank: below the limit each round
-    // broadcasts the |nodes|-row label table; past it the label join
-    // runs as a src-keyed shuffle join (the persisted edge cache is the
-    // big stable side, the label table the small per-round one). The
-    // count doubles as eager materialization of the node checkpoint.
-    val useBroadcast = nodes.count() < flipAt
-    labelRoundsFrom(edges, nodes, useBroadcast)
+    labelRoundsFrom(edges, nodes)
   }
 
   /** The propagation ROUND half over prepared (edges, nodes) — shared
@@ -325,8 +283,8 @@ LIMIT 100"""
     * x61's edge list, and whose node table IS x61's node set: a part
     * has wout > 0 iff some ≥2-item order pairs it).
     */
-  private def labelRoundsFrom(edges: DataFrame, nodes: DataFrame,
-      useBroadcast: Boolean): DataFrame = {
+  private def labelRoundsFrom(edges: DataFrame,
+      nodes: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     var labels = nodes.select(col("node"), col("node").as("label"))
     for (_ <- 1 to LpRounds) {
@@ -338,10 +296,11 @@ LIMIT 100"""
       // the nesting is shallow and the checkpoint jobs cost more than
       // the re-planning they save (A/B measured 3.1 s plain vs 4.3-5.2 s
       // checkpointed at sf0.1); past ~3 rounds flip to the
-      // partPagerank discipline.
-      val lsrc = labels.withColumnRenamed("node", "src")
+      // partPagerank discipline. Broadcast hinted for the same reason
+      // as partPagerank's rounds, under the same scale bound.
       labels = edges
-        .join(if (useBroadcast) broadcast(lsrc) else lsrc, Seq("src"))
+        .join(broadcast(labels.withColumnRenamed("node", "src")),
+          Seq("src"))
         .groupBy(col("dst"), col("label"))
         .agg(sum(col("w")).as("mass"))
         .groupBy(col("dst").as("node"))
@@ -506,8 +465,7 @@ ORDER BY p_partkey"""
         pagerankFrom(
           Tables.parquet(s, s"$r/transition")
             .transform(graft.Caches.scoped),
-          Tables.parquet(s, s"$r/nodes"),
-          n, useBroadcast = n < BroadcastNodeLimit)
+          Tables.parquet(s, s"$r/nodes"), n)
       },
       Some(pagerankOracle),
       "PageRank served from the persisted transition table"),
@@ -519,18 +477,15 @@ ORDER BY p_partkey"""
     // ── x61 served from the SAME persisted transition table as x46s
     // (one graph artifact serves the whole link-analysis family): the
     // (src, dst, w) columns are x61's edge list verbatim, the node
-    // table is x61's node set, and the flip verdict reads the manifest.
+    // table is x61's node set.
     "x61s_communities_serve" -> QueryDef(
       (s, d) => {
         GraphServe.prepare(s, d)
         val r = GraphServe.root(d)
-        val n = java.nio.file.Files.readString(
-          java.nio.file.Paths.get(s"$r/node_count.txt")).trim.toLong
         labelRoundsFrom(
           Tables.parquet(s, s"$r/transition").select("src", "dst", "w")
             .transform(graft.Caches.scoped),
-          Tables.parquet(s, s"$r/nodes"),
-          useBroadcast = n < BroadcastNodeLimit)
+          Tables.parquet(s, s"$r/nodes"))
       },
       Some(labelPropOracle),
       "label propagation served from the persisted transition table"),
@@ -559,8 +514,8 @@ ORDER BY p_partkey"""
   * analysis row (one fan-out + aggregation over all of lineitem), and
   * an application derives it once per data version — the
   * [[AuditServe]] discipline keyed on `lineitem.parquet`. The node
-  * count persists alongside as a manifest so the serve row's
-  * broadcast/shuffle flip needs no count() job at plan construction.
+  * count persists alongside as a manifest: x46s's uniform base rank is
+  * a literal, so the serve row needs no count() job at plan construction.
   */
 object GraphServe {
 
@@ -581,10 +536,12 @@ object GraphServe {
     if (!Serve.complete(r, ArtifactDirs)) graft.Caches.scope(s) {
       // the scope releases the build's caches; a clearCache here would
       // also drop those of the enclosing query and of concurrent scopes
-      val (ew, nodes, n, _) = GraphQueries.transitionTable(
-        s, dir, GraphQueries.BroadcastNodeLimit)
-      // partitioned on src: each round's state join reads it keyed the
-      // way the shuffle path would re-key it anyway
+      val (ew, nodes, n) = GraphQueries.transitionTable(s, dir)
+      // the repartition's exchange lets AQE coalesce the table into few
+      // files (1 at sf0.01, 4 without it), so the serve rows' scans run
+      // fewer tasks. Measured without it (Probe summary, sf0.01, 3 runs
+      // a side, 2026-10): x61s 0.54-0.58 -> 0.60-0.76 s, x46s and x71s
+      // a few percent slower.
       ew.repartition(col("src"))
         .write.mode("overwrite").parquet(s"$r/transition")
       nodes.coalesce(1).write.mode("overwrite").parquet(s"$r/nodes")

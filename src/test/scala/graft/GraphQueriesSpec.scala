@@ -88,6 +88,15 @@ class GraphQueriesSpec extends SparkSpec {
     assert(sizes.size < label.size)
   }
 
+  test("building x61's plan launches no Spark job") {
+    // the edge and set caches are lazy and the label rounds are one
+    // plan, so every job belongs to the consumer's action
+    val stages = jobStages(
+      SparkEntry.queries("x61_label_communities")(spark, sf))
+    spark.catalog.clearCache()
+    assert(stages.isEmpty, s"plan construction ran jobs: $stages")
+  }
+
   test("x46s: serving from the persisted transition table equals the " +
       "self-contained x46, and a repeat call reuses the artifact") {
     def rows(name: String) = SparkEntry.queries(name)(spark, sf)
