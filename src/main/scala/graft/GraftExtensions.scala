@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{DotLong, IntersectCountSorted, KmvSketch, LocalComponents, MinHashSigs, MinKSample, Shingles3, SimHashBits, SrpBandKeys, SumWeightedEntries, VecSumLong}
+import graft.functions.{CharWindows, DotLong, IntersectCountSorted, KmvSketch, LocalComponents, MinHashSigs, MinKSample, Shingles3, SimHashBits, SrpBandKeys, SumWeightedEntries, VecSumLong}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -53,6 +53,14 @@ object GraftExtensions {
     (FunctionIdentifier("shingles3"),
       new ExpressionInfo(classOf[Shingles3].getName, "shingles3"),
       (args: Seq[Expression]) => Shingles3(args(0))),
+    (FunctionIdentifier("char_windows"),
+      new ExpressionInfo(classOf[CharWindows].getName, "char_windows"),
+      (args: Seq[Expression]) => args match {
+        case Seq(t, Literal(len: Int, _)) => CharWindows(t, len)
+        case other => throw new IllegalArgumentException(
+          "char_windows(text, len): expected (string, integer literal), " +
+            s"got $other")
+      }),
     (FunctionIdentifier("local_components"),
       new ExpressionInfo(classOf[LocalComponents].getName,
         "local_components"),

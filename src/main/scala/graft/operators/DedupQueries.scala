@@ -157,8 +157,8 @@ bands AS (
         .agg(count(lit(1)).as("df"))
         .filter(col("df") > cap)
         .select("shingle", "lang")
-      // scope-cached for the same reason as [[ngramJaccard]]'s capped
-      // posting: both pair-join sides read it, one df pass not two
+      // scope-cached: both pair-join sides read the capped posting
+      // list, one df pass not two
       fullPosting.join(hot, Seq("shingle", "lang"), "left_anti")
         .transform(graft.Caches.scoped)
     }
@@ -236,40 +236,31 @@ sh AS (SELECT doc_id, CAST($bits AS BIGINT) AS simhash FROM t)"""
     * jaccard is underestimated for pairs whose overlap is mostly
     * boilerplate — which is exactly the behavior corpus-dedup pipelines
     * want from a df cap (common n-grams carry no near-dup signal). The
-    * default `None` is the exact inverted-index join.
+    * default `None` is the exact inverted-index join; the capped path is
+    * [[cappedJaccard]].
     */
   def ngramJaccard(s: org.apache.spark.sql.SparkSession, d: String,
       dfCap: Option[Int] = None): org.apache.spark.sql.DataFrame = {
-    // persisted: four plan branches read this (posting a/b, sizes a/b)
-    // and shingling is the expensive part — cache-once beats 4×
-    // recompute at any scale (MEMORY_AND_DISK spills, never OOMs)
     graft.GraftExtensions.ensureInstalled(s)
-    val docs = Tables.documentsSpread(s, d)
+    val shingled = Tables.documentsSpread(s, d)
       .withColumn("sh", expr("shingles3(text)"))
       .select(col("doc_id"), col("lang"),
         expr("n_chars div 200").as("bkt"), col("sh"))
-      .transform(graft.Caches.scoped)
+    dfCap.fold(exactJaccard(shingled))(cappedJaccard(shingled, _))
+      .filter(col("jaccard") >= 0.05d)
+      .orderBy("doc_a", "doc_b")
+  }
+
+  /** x08's exact inverted-index join over (doc_id, lang, bkt, sh). */
+  private def exactJaccard(shingled: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    // persisted: four plan branches read this (posting a/b, sizes a/b)
+    // and shingling is the expensive part — cache-once beats 4×
+    // recompute at any scale (MEMORY_AND_DISK spills, never OOMs)
+    val docs = shingled.transform(graft.Caches.scoped)
     val sizes = docs.select(col("doc_id"), size(col("sh")).as("sz"))
-    val fullPosting = docs.select(col("doc_id"), col("lang"), col("bkt"),
+    val posting = docs.select(col("doc_id"), col("lang"), col("bkt"),
       explode(col("sh")).as("shingle"))
-    // The df computation is one extra aggregation on the same key space
-    // the pair join shuffles on; the hot set it anti-joins away is small
-    // by construction (only keys over the cap), so AQE broadcasts it.
-    val posting = dfCap.fold(fullPosting) { cap =>
-      val hot = fullPosting
-        .groupBy(col("shingle"), col("lang"), col("bkt"))
-        .agg(count(lit(1)).as("df"))
-        .filter(col("df") > cap)
-        .select("shingle", "lang", "bkt")
-      // scope-cached: both sides of the pair join read the capped
-      // posting list, and without the cache the df aggregation + the
-      // anti-join — a full pass over every shingle occurrence — ran
-      // twice per invocation. The uncapped path stays uncached: there
-      // it is a bare explode over the already-cached docs, cheaper to
-      // recompute than to store (the r13 x73 lesson).
-      fullPosting.join(hot, Seq("shingle", "lang", "bkt"), "left_anti")
-        .transform(graft.Caches.scoped)
-    }
     posting.as("a").join(posting.as("b"),
         col("a.shingle") === col("b.shingle") &&
           col("a.lang") === col("b.lang") &&
@@ -282,8 +273,44 @@ sh AS (SELECT doc_id, CAST($bits AS BIGINT) AS simhash FROM t)"""
       .select(col("doc_a"), col("doc_b"),
         (col("inter").cast("double") /
           (col("sa.sz") + col("sb.sz") - col("inter"))).as("jaccard"))
-      .filter(col("jaccard") >= 0.05d)
-      .orderBy("doc_a", "doc_b")
+  }
+
+  /** x08c: the `dfCap` posting list as ONE aggregation on (shingle,
+    * lang, bkt) — each group's df plus a bounded `mink_sample` of its
+    * members `(doc_id, |sh|)`, at most `cap + 1` of them, so a hot
+    * shingle's group state stays O(cap) however large its df (the skew
+    * bound the cap exists for). A group with 2 ≤ df ≤ cap holds all its
+    * members; each such group is paired against itself (`a < b`), and
+    * counting a pair's groups is |A∩B| over the kept shingles, with the
+    * sizes carried in the sample. One shuffle of the posting list on
+    * its key, no posting self-join, no size joins, no cache.
+    *
+    * Relies on `doc_id` being a unique BIGINT per document (true of
+    * `documents` at every SF; another type fails `mink_sample`'s type
+    * check): the sample's total order is `(doc_id, doc_id)`, so two
+    * rows sharing an id would merge into one member.
+    * NULL lang / NULL bkt rows join nothing in [[exactJaccard]]'s
+    * equi-join and are dropped before the aggregation here.
+    */
+  private def cappedJaccard(shingled: org.apache.spark.sql.DataFrame,
+      cap: Int): org.apache.spark.sql.DataFrame = {
+    shingled.filter(col("lang").isNotNull && col("bkt").isNotNull)
+      .select(col("doc_id"), col("lang"), col("bkt"),
+        size(col("sh")).cast("bigint").as("sz"),
+        explode(col("sh")).as("shingle"))
+      .groupBy("shingle", "lang", "bkt")
+      .agg(count(lit(1)).as("df"),
+        expr(s"mink_sample(struct(doc_id, doc_id, sz), ${cap + 1})").as("m"))
+      .filter(col("df").between(2, cap))
+      .select(explode(col("m")).as("a"), col("m"))
+      .select(col("a"), explode(col("m")).as("b"))
+      .filter(col("a.tag") < col("b.tag"))
+      .groupBy(col("a.tag").as("doc_a"), col("b.tag").as("doc_b"),
+        col("a.val").as("sa"), col("b.val").as("sb"))
+      .agg(count(lit(1)).as("inter"))
+      .select(col("doc_a"), col("doc_b"),
+        (col("inter").cast("double") /
+          (col("sa") + col("sb") - col("inter"))).as("jaccard"))
   }
 
   /** MinHash signatures per doc (persisted — the minhash pass over every
@@ -649,7 +676,6 @@ $rounds"""
     */
   def dupSpans(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // two plan branches read the tokenized corpus (gram build, sizes);
     // persist the cheap token arrays once
     val docs = Tables.documentsSpread(s, d)
@@ -668,9 +694,8 @@ $rounds"""
     val dup = pos.groupBy("fp")
       .agg(countDistinct(col("doc_id")).as("df"))
       .filter(col("df") >= 2).select("fp")
-    val covered = pos.join(dup, Seq("fp"))
-      .select(col("doc_id"), col("s"), (col("s") + 4).as("e"))
-    val spans = coalesceIslands(covered, "dup_tokens")
+    val covered = pos.join(dup, Seq("fp")).select(col("doc_id"), col("s"))
+    val spans = coalesceIslands(covered, 5, "dup_tokens")
     docs.select(col("doc_id"), size(col("w")).cast("bigint").as("n_tokens"))
       .join(spans, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_tokens"),
@@ -718,28 +743,27 @@ SELECT t.doc_id, CAST(len(t.w) AS BIGINT) AS n_tokens,
 FROM t LEFT JOIN agg a USING (doc_id)
 ORDER BY doc_id"""
 
-  /** The classic island sweep, shared by x69 and x100 so the two
-    * span-coalescing semantics cannot drift: covered windows
-    * `(doc_id, s, e)` merge into maximal spans (new island when a
-    * window starts past the running max-end + 1), reduced to per-doc
-    * span count + covered length. ONE doc_id-keyed window pass.
+  /** The island sweep for fixed-width windows, shared by x69 and x100
+    * so the two span-coalescing semantics cannot drift: covered windows
+    * `(doc_id, s)`, each covering `[s, s + width − 1]`, merge into
+    * maximal spans (a window starting past the running max-end + 1
+    * opens a new span), reduced to per-doc span count + covered length.
+    * All windows share one width, so the running max-end is the
+    * previous window's end: with `gap = s − lag(s)` per doc, a window
+    * opens a span iff `gap IS NULL OR gap > width` and then adds
+    * `width` positions, else the `gap` positions past the previous
+    * end. ONE doc_id-keyed lag window + one groupBy.
     */
   private def coalesceIslands(covered: org.apache.spark.sql.DataFrame,
-      lenCol: String): org.apache.spark.sql.DataFrame = {
+      width: Int, lenCol: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val byStart = Window.partitionBy("doc_id").orderBy("s")
-    val prevMax = max(col("e")).over(
-      byStart.rowsBetween(Window.unboundedPreceding, -1))
+    val opens = col("gap").isNull || col("gap") > width
     covered
-      .withColumn("brk",
-        when(col("s") > coalesce(prevMax, lit(-1)) + 1, 1).otherwise(0))
-      .withColumn("island", sum(col("brk")).over(
-        byStart.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy("doc_id", "island")
-      .agg(min(col("s")).as("ss"), max(col("e")).as("ee"))
+      .select(col("doc_id"), (col("s") - lag(col("s"), 1).over(
+        Window.partitionBy("doc_id").orderBy("s"))).as("gap"))
       .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_spans"),
-        sum(col("ee") - col("ss") + 1).as(lenCol))
+      .agg(count(when(opens, 1)).as("n_spans"),
+        sum(when(opens, width).otherwise(col("gap"))).as(lenCol))
   }
 
   /** Character window of the exact-substring pass (Lee et al. use 50
@@ -747,7 +771,7 @@ ORDER BY doc_id"""
     * 44-577-char documents while staying long enough that coverage
     * means a real verbatim passage, not a common word).
     */
-  private[operators] val ExactSubstrLen = 20
+  private[graft] val ExactSubstrLen = 20
 
   /** Occurrence floor of the declared heavy twin (x100c): only
     * substrings seen MORE than this many times corpus-wide count —
@@ -773,55 +797,49 @@ ORDER BY doc_id"""
     * this position occurs ≥ 2 times" — any duplicated substring of
     * length ≥ L contains only duplicated L-windows, and any duplicated
     * L-window IS such a substring — so the global suffix sort
-    * re-expresses as one partial-aggregable fingerprint groupBy plus
-    * the x69 semi-join + island sweep: every stage keyed,
-    * map-combinable, no corpus-wide sort and no pair join, which is
-    * the 100 TB shape (the fan-out is one fixed 16-byte fingerprint
-    * per character position — linear, the honest cost ExactSubstr pays
-    * in any formulation; the paper's suffix array is the same O(corpus)
-    * with a global sort on top). `minCount` is the boilerplate lever:
-    * raising it (x100c) keeps only heavily-repeated text, the variant
-    * the paper discusses for license-header-grade duplication — a
-    * documented semantics change with its own oracle row, not an
-    * optimization. At serve time the duplicated-fingerprint set is the
-    * natural persisted artifact (the x27 decontamination pattern: new
-    * batches semi-join the frozen fp set instead of re-counting the
-    * corpus).
+    * re-expresses as one occurrence count per window text plus the
+    * x69 island sweep: two keyed shuffles (the fan-out on its window
+    * text, the covered windows on doc_id), each sorted only within its
+    * partitions, no global sort and no pair join, which is the 100 TB
+    * shape (the fan-out is one L-character window per character
+    * position — linear, the honest cost ExactSubstr pays in any
+    * formulation; the paper's suffix array is the same O(corpus) with
+    * a global sort on top). The shuffle key is the window text
+    * itself, produced by the native `char_windows` kernel: exact, so no
+    * hash-collision argument is needed, and for Latin text (1 byte per
+    * character) no wider than a 32-character md5 hex digest; CJK and
+    * emoji text pay 3-4 bytes per character (SCALE.md). `minCount` is
+    * the boilerplate lever: raising it (x100c) keeps only
+    * heavily-repeated text, the variant the paper discusses for
+    * license-header-grade duplication — a documented semantics change
+    * with its own oracle row, not an optimization. At serve time the
+    * duplicated-window set is the natural persisted artifact (the x27
+    * decontamination pattern: new batches semi-join the frozen set
+    * instead of re-counting the corpus).
     *
-    * Both engines index by CHARACTER (Spark `substring` counts UTF-16
-    * units, DuckDB code points — identical on this corpus's
-    * surrogate-free text, the mm04 convention).
+    * Both engines index by CHARACTER: Spark's `length`/`substring` (and
+    * `char_windows`) count code points, as DuckDB's `length`/`substr`
+    * do, so supplementary-plane text windows the same on both sides.
     */
   def exactSubstrSpans(s: org.apache.spark.sql.SparkSession,
       d: String, minCount: Int): org.apache.spark.sql.DataFrame = {
+    graft.GraftExtensions.ensureInstalled(s)
     val L = ExactSubstrLen
-    val docs = Tables.documentsSpread(s, d)
-      .select(col("doc_id"), col("text"))
-      .transform(graft.Caches.scoped)
-    // map-side fan-out: one (doc_id, pos, 16-byte fp) row per character
-    // position; the window text never leaves the map side. SCOPE-CACHED:
-    // both consumers below (the duplicated-fp count and the coverage
-    // join) read this frame, and without the cache the per-character
-    // md5 explode — the heaviest map stage of the query — ran TWICE per
-    // invocation (r13 verdict). The cache holds the fingerprint fan-out
-    // (~36 B/char) at MEMORY_AND_DISK, the same storage-vs-recompute
-    // trade the paper's suffix array materializes; recomputing it is
-    // the one alternative and costs a second full md5 pass at any scale.
-    val pos = docs.filter(length(col("text")) >= L)
-      .select(col("doc_id"), explode(expr(
-        s"""transform(sequence(1, length(text) - ${L - 1}),
-             i -> struct(i, md5(cast(substring(text, i, $L)
-                                     as binary)) AS fp))""")).as("g"))
-      .select(col("doc_id"), col("g.i").as("s"), col("g.fp").as("fp"))
-      .transform(graft.Caches.scoped)
-    // TOTAL occurrence count (not distinct docs): within-doc repeats
-    // are duplicates under ExactSubstr
-    val dup = pos.groupBy("fp")
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") >= minCount).select("fp")
-    val covered = pos.join(dup, Seq("fp"))
-      .select(col("doc_id"), col("s"), (col("s") + (L - 1)).as("e"))
-    val spans = coalesceIslands(covered, "dup_chars")
+    import org.apache.spark.sql.expressions.Window
+    val docs = Tables.documentsSpread(s, d).select(col("doc_id"), col("text"))
+    // one (doc_id, start, window) row per character position, shuffled
+    // once on the window text; each window's TOTAL occurrence count
+    // (not distinct docs: within-doc repeats are duplicates under
+    // ExactSubstr) rides along on the same partitioning. Nothing is
+    // cached: the only other reader of `docs` (n_chars) reuses its
+    // spread exchange, and no frame is read twice.
+    val covered = docs
+      .select(col("doc_id"),
+        posexplode(expr(s"char_windows(text, $L)")).as(Seq("p", "w")))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy("w")))
+      .filter(col("n") >= minCount)
+      .select(col("doc_id"), (col("p") + 1).as("s"))
+    val spans = coalesceIslands(covered, L, "dup_chars")
     docs.select(col("doc_id"),
         length(col("text")).cast("bigint").as("n_chars"))
       .join(spans, Seq("doc_id"), "left")

@@ -10,13 +10,15 @@ import scala.util.Try
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning, RoundRobinPartitioning, SinglePartition}
 import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.{col, count, lit, sum, to_json, xxhash64}
 import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** The per-query dev probe: what one registry query costs, layer by
   * layer, on one session — or, in `scale` mode, how that cost grows
@@ -25,7 +27,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *   - `summary`: one dispatch-floor line (ms per empty one-task-per-slot
   *     job), then one line per (query, dir) — wall split into build (the
   *     builder call, including any jobs it runs eagerly), plan (the
-  *     terminal count's `executedPlan` forced) and exec; the Catalyst
+  *     terminal [[digest]]'s `executedPlan` forced) and exec; the Catalyst
   *     `tracker.phases`; jobs, stages, tasks, task-seconds and the
   *     driver-side residue `wall − taskS / slots`. Streaming drains add
   *     one line per micro-batch with its `durationMs` breakdown.
@@ -249,10 +251,35 @@ object Probe {
       warm: String): Seq[Run] =
     measureWarmed(spark, names, dirs, warmUp(spark, _, warm))
 
-  /** `query` built and counted once at `dir`, in a scope. */
+  /** `query` built and consumed through [[digest]] once at `dir`, in a
+    * scope; the row count.
+    */
   private def warmUp(spark: SparkSession, query: String,
       dir: String): Try[Long] =
-    Try(scoped(spark)(SparkEntry.queries(query)(spark, dir).count()))
+    Try(scoped(spark)(
+      digest(SparkEntry.queries(query)(spark, dir)).collect()(0).getLong(0)))
+
+  /** How a measured run consumes a query: one row of its row count and
+    * the sum of `xxhash64` over all its columns (map columns through
+    * `to_json`, as Spark refuses to hash maps), the digest a result
+    * consumer computes. A bare `count` would let Catalyst prune every
+    * column it does not read — a left join's right side with its
+    * windows and aggregations — and measure a plan no consumer runs.
+    */
+  def digest(df: DataFrame): DataFrame = {
+    def hasMap(t: DataType): Boolean = t match {
+      case _: MapType         => true
+      case ArrayType(e, _)    => hasMap(e)
+      case StructType(fields) => fields.exists(f => hasMap(f.dataType))
+      case _                  => false
+    }
+    val cols = df.schema.fields.toSeq.map { f =>
+      val c = col(s"`${f.name.replace("`", "``")}`")
+      if (hasMap(f.dataType)) to_json(c) else c
+    }
+    val h = if (cols.isEmpty) lit(0L) else xxhash64(cols: _*)
+    df.agg(count(lit(1)).as("n"), sum(h.cast("decimal(38,0)")).as("h"))
+  }
 
   /** One measured run per query and dir, each query after `warmed(q)`;
     * a failed warm-up fails the query's records.
@@ -302,11 +329,11 @@ object Probe {
       val (t1, t2, t3, phases) = scoped(spark) {
         val built = SparkEntry.queries(n)(spark, d)
         val t1 = System.nanoTime()
-        val counted = built.groupBy().count()
-        counted.queryExecution.executedPlan
+        val consumed = digest(built)
+        consumed.queryExecution.executedPlan
         val t2 = System.nanoTime()
-        counted.collect()
-        (t1, t2, System.nanoTime(), counted.queryExecution.tracker.phases)
+        consumed.collect()
+        (t1, t2, System.nanoTime(), consumed.queryExecution.tracker.phases)
       }
       drain()
       val wallS = (t3 - t0) / 1e9
@@ -429,12 +456,11 @@ object Probe {
     "hashExchange", "rangeExchange", "singleExchange", "roundRobinExchange",
     "otherExchange", "BroadcastExchange", "Window")
 
-  /** Join, exchange and window operators in `plan`, counting inside AQE
-    * wrappers and query stages, subqueries and cached relations — each cached relation
-    * once, however often it is scanned, as it is computed once. Reused
-    * exchanges are not new shuffles and are not counted.
+  /** Every operator of `plan`, inside AQE wrappers and query stages,
+    * subqueries and cached relations — each cached relation's plan
+    * once, however often it is scanned, as it is computed once.
     */
-  def nodeCounts(plan: SparkPlan): Seq[(String, Int)] = {
+  def planNodes(plan: SparkPlan): Seq[SparkPlan] = {
     val cached = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
     def all(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
@@ -444,7 +470,14 @@ object Probe {
         Seq(s.relation.cachedPlan).filter(cached.add)
       case _ => p.children ++ p.subqueries
     }).flatMap(all)
-    val names = all(plan).map {
+    all(plan)
+  }
+
+  /** Join, exchange and window operators among [[planNodes]]. Reused
+    * exchanges are not new shuffles and are not counted.
+    */
+  def nodeCounts(plan: SparkPlan): Seq[(String, Int)] = {
+    val names = planNodes(plan).map {
       case e: ShuffleExchangeExec => e.outputPartitioning match {
         case _: HashPartitioning       => "hashExchange"
         case _: RangePartitioning      => "rangeExchange"

@@ -1,9 +1,10 @@
 package graft
 
 /** [[Probe]] is the one per-query dev tool: pin that its records stay
-  * filled for a batch row and a streaming row, that plan mode keeps the
-  * `explain("formatted")` layout and a parseable node-count line, and
-  * that scale mode keeps a filled record per size, the streaming state
+  * filled for a batch row and a streaming row, that a measured run
+  * consumes every column (so no join or window is pruned away), that
+  * plan mode keeps the `explain("formatted")` layout and a parseable
+  * node-count line, and that scale mode keeps a filled record per size, the streaming state
   * and a finite exponent, and replaces spiked passes within its budget.
   */
 class ProbeSpec extends SparkSpec {
@@ -44,6 +45,20 @@ class ProbeSpec extends SparkSpec {
       case other => fail(s"unparseable node-count line: $other")
     }
     assert(p.render.startsWith(s"\n===== j01_inner_join =====\n${p.text}\n"))
+  }
+
+  test("summary consumes every column: x100c keeps its span windows") {
+    def windows(df: org.apache.spark.sql.DataFrame): Int = {
+      df.collect()
+      Probe.nodeCounts(df.queryExecution.executedPlan).toMap.apply("Window")
+    }
+    Caches.scope(spark) {
+      val built = SparkEntry.queries("x100c_substr_heavy")(spark, sf)
+      // the occurrence count over the window text and the lag window
+      assert(windows(Probe.digest(built)) == 2)
+      // a bare count prunes the left join to the spans, windows and all
+      assert(windows(built.groupBy().count()) == 0)
+    }
   }
 
   test("scale: a filled record per size, growing st06 state, finite beta") {
